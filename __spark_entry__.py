@@ -1570,8 +1570,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def q_crawl_dedup_incremental(spark, sf_dir):
         """'Train on new data only' ON REAL CRAWL OUTPUT (r4 verdict item
         1): phase A crawls a 2-host synthetic web to drain — the engine
-        maintains the ``dedup_index`` table per generation
-        (cfg.maintain_dedup_index) — then phase B reseeds two more hosts
+        maintains the ``dedup_index`` table per generation — then phase B reseeds two more hosts
         and resumes to drain. The new batch = Catalog.read_incremental
         ("pages", S1) (manifest file-diff, only phase-B files opened);
         the keep-set = dedup_keep_ids_incremental(old_index=

@@ -195,7 +195,7 @@ class TestIncrementalRead:
         s1 = cat.current_snapshot()
         cat.stage_append("t", df_of(spark, 2, "b"))
         cat.commit(generation=1, t0=1.0)
-        cat.compact("t")
+        cat.stage("t", cat.read("t"))  # compaction: rewrite the live rows
         cat.commit(generation=2, t0=2.0)
         got = {r["v"] for r in cat.read_incremental("t", since=s1).collect()}
         assert {f"b{i}" for i in range(2)} <= got  # superset, never a miss
@@ -265,7 +265,7 @@ class TestMaintenance:
             s = cat.commit(generation=g, t0=float(g))
         n_files_before = len(s.tables["t"]["files"])
         rows_before = sorted(map(tuple, cat.read("t").collect()))
-        cat.compact("t", partitions=2)
+        cat.stage("t", cat.read("t"), partitions=2)
         s2 = cat.commit(generation=99, t0=99.0)
         assert len(s2.tables["t"]["files"]) < n_files_before
         assert sorted(map(tuple, cat.read("t").collect())) == rows_before
@@ -343,10 +343,10 @@ class TestCopyOnWrite:
         full = self._rows(spark, [(f"u{i}", i % 2, 0) for i in range(8)])
         cat.stage("t", full)
         s0 = cat.commit(generation=0, t0=0.0)
-        assert not cat.has_bucket_lineage("t", s0)
+        assert cat.bucket_files("t", s0) is None
         cat.stage_cow("t", full, "shard", None, s0)
         s1 = cat.commit(generation=1, t0=0.0)
-        assert cat.has_bucket_lineage("t", s1)
+        assert cat.bucket_files("t", s1) is not None
         assert cat.read("t").count() == 8
 
 
@@ -384,21 +384,14 @@ class TestFrontierCow:
 
 
 class TestSchemaGuard:
-    def test_legacy_catalog_raises_then_migrates(self, spark, tmp_path):
+    def test_legacy_catalog_raises(self, spark, tmp_path):
         """A catalog whose pages/robots predate SCHEMA_V (simulated by
         stripping the marker and the new columns) must refuse to resume
-        with a clear error — NOT silently stage_append mixed-schema files —
-        and migrate_catalog() must repair it in one snapshot."""
+        with a clear error — NOT silently stage_append mixed-schema files."""
         import pytest as _pytest
-        from pyspark.sql import functions as F
 
         from web_scraper_spark.config import CrawlConfig
-        from web_scraper_spark.crawl import (
-            SCHEMA_V,
-            migrate_catalog,
-            run_crawl,
-            run_generation,
-        )
+        from web_scraper_spark.crawl import run_crawl, run_generation
         from web_scraper_spark.synth import SynthWebConfig, seed_url_rows
 
         web = SynthWebConfig(n_hosts=2, pages_per_host=6)
@@ -422,64 +415,8 @@ class TestSchemaGuard:
         m.pop("schema_v", None)
         cat.commit(generation=snap.generation, t0=snap.t0, metrics=m)
 
-        with _pytest.raises(ValueError, match="schema_v"):
+        with _pytest.raises(ValueError, match="schema_v.*re-crawled"):
             run_generation(cat, cfg, web)
-
-        migrate_catalog(cat)
-        snap2 = cat.current_snapshot()
-        assert snap2.metrics["schema_v"] == SCHEMA_V
-        pages = cat.read("pages")
-        assert "meta" in pages.columns
-        assert dict(pages.dtypes)["crawl_rank"] == "bigint"
-        assert "fetch_seq" in cat.read("robots").columns
-        # resumes cleanly after migration
-        run_generation(cat, cfg, web)
-
-    def test_half_upgraded_robots_backfills_rowwise(self, spark, tmp_path):
-        """A robots table MIXING pre- and post-fetch_seq parquet files
-        (written by an engine that added the column before the schema_v
-        guard existed): migrate_catalog must repair it regardless of which
-        file Spark's schema sampling hits first — mergeSchema read +
-        row-wise coalesce, never the column-presence shortcut alone."""
-        from pyspark.sql import functions as F
-
-        from web_scraper_spark.catalog import Catalog
-        from web_scraper_spark.crawl import SCHEMA_V, migrate_catalog
-        from web_scraper_spark.operators.robots import rules_from_corpus
-
-        cat = Catalog(spark, str(tmp_path / "cat2"))
-        old = rules_from_corpus(
-            spark.createDataFrame(
-                [("h0.test", "User-agent: *\nDisallow: /a\n")], ["host", "body"]
-            ),
-            fetched_at=7,
-        ).drop("fetch_seq")
-        cat.stage("robots", old)
-        cat.commit(generation=0, t0=0.0)  # no schema_v marker: pre-v3
-        snap = cat.current_snapshot()
-
-        new = rules_from_corpus(
-            spark.createDataFrame(
-                [("h1.test", "User-agent: *\nDisallow: /b\n")], ["host", "body"]
-            ),
-            fetched_at=9,
-            fetch_seq=3,
-        )
-        cat.stage_append("robots", new, snap)
-        m = dict(snap.metrics)
-        m.pop("schema_v", None)
-        cat.commit(generation=1, t0=0.0, metrics=m)
-
-        migrate_catalog(cat)
-        snap2 = cat.current_snapshot()
-        assert snap2.metrics["schema_v"] == SCHEMA_V
-        robots = cat.read("robots")
-        rows = {r["host"]: r for r in robots.filter(F.col("rule_type") == "disallow").collect()}
-        # old-file rows: backfilled row-wise from fetched_at; new-file rows
-        # keep their explicit fetch_seq
-        assert rows["h0.test"]["fetch_seq"] == 7
-        assert rows["h1.test"]["fetch_seq"] == 3
-        assert robots.filter(F.col("fetch_seq").isNull()).count() == 0
 
 
 class TestRetentionManifestOrder:

@@ -16,7 +16,13 @@ from pyspark.sql import functions as F
 
 from oracle_sim import HostState, sha1_hex, simulate
 from web_scraper_spark.config import CrawlConfig
-from web_scraper_spark.crawl import resume_crawl, run_crawl, run_generation, init_crawl
+from web_scraper_spark.crawl import (
+    init_crawl,
+    reseed_crawl,
+    resume_crawl,
+    run_crawl,
+    run_generation,
+)
 from web_scraper_spark.synth import SynthWebConfig, seed_url_rows
 
 
@@ -189,6 +195,44 @@ class TestCompaction:
         files_a = sum(len(e["files"]) for e in cat_a.current_snapshot().tables.values())
         files_b = sum(len(e["files"]) for e in cat_b.current_snapshot().tables.values())
         assert files_b < files_a
+
+
+class TestBucketPureInvariant:
+    def test_every_commit_keeps_bucket_lineage(self, spark, tmp_path_factory):
+        """Every bucketed state table is bucket-pure after every commit —
+        through compactions, the drained-frontier commit (the reseeded
+        seeds are all seen, so that generation pops them all) and the
+        reseed itself — and the results stay simulator-exact."""
+        web = SynthWebConfig(n_hosts=3, pages_per_host=8)
+        cfg = CrawlConfig(max_depth=2, horizon=5.0, num_shards=8, compact_every=2)
+        cat = run_crawl(
+            spark, str(tmp_path_factory.mktemp("bucket_pure")), _seeds_df(spark, web),
+            cfg, web, max_generations=40,
+        )
+        reseed_crawl(cat, _seeds_df(spark, web), cfg)
+        reseeded = cat.current_snapshot().tables["frontier"]["rows"]
+        resume_crawl(cat, cfg, web, max_generations=5)
+        assert cat.current_snapshot().tables["frontier"]["rows"] == 0
+
+        for sid in range(cat.current_snapshot().snapshot_id + 1):
+            tables = cat.snapshot(sid).tables
+            expected = ("frontier",) if sid == 0 else (
+                "frontier", "seen", "robots", "host_state", "dedup_index"
+            )
+            for t in expected:
+                assert "buckets" in tables[t], (sid, t)
+
+        sim = simulate(_seed_list(web), cfg, web)
+        order, seen, hs, m = engine_state(cat)
+        assert [u for u, _, _ in order] == [u for _, u, _, _ in sim.crawl_order]
+        assert seen == sim.seen
+        assert hs == {
+            h: (round(s.min_delay, 9), round(s.current_delay, 9), round(s.last_fetch, 9), s.errors)
+            for h, s in sim.host_state.items()
+        }
+        for k in ("urls_processed", "urls_disallowed", "bytes_downloaded"):
+            assert m[k] == sim.metrics[k], k
+        assert m["urls_skipped"] == sim.metrics["urls_skipped"] + reseeded
 
 
 class TestStressEquivalence:

@@ -103,35 +103,3 @@ class TestDedupIndexMaintained:
         assert new_pages.count() > 0
         assert keep.count() > 0
         dedupops.unpersist_op_caches()
-
-    def test_backfill_matches_loop_maintained_index(self, spark, tmp_path):
-        """A catalog crawled with the flag OFF backfills to the exact same
-        index the loop would have maintained."""
-        from web_scraper_spark import synth
-        from web_scraper_spark.config import CrawlConfig
-        from web_scraper_spark.crawl import _dedup_index_rows, backfill_dedup_index, run_crawl
-
-        web = synth.SynthWebConfig(n_hosts=2, pages_per_host=4)
-        cfg = CrawlConfig(
-            max_pages=0, max_depth=32, horizon=30.0, num_shards=8,
-            num_host_buckets=8, maintain_dedup_index=False,
-        )
-        seeds = spark.createDataFrame(
-            [("http://h0.example.test/p/0", 1)], ["url", "priority"]
-        )
-        cat = run_crawl(
-            spark, str(tmp_path / "bf"), seeds, cfg, web, max_generations=20
-        )
-        assert "dedup_index" not in cat.current_snapshot().tables
-        backfill_dedup_index(cat, cfg)
-        snap = cat.current_snapshot()
-        assert snap.tables["dedup_index"]["rows"] == snap.tables["pages"]["rows"]
-        got = {
-            (r["id"], r["fp"], r["sh"], r["shard"])
-            for r in cat.read("dedup_index").collect()
-        }
-        want = {
-            (r["id"], r["fp"], r["sh"], r["shard"])
-            for r in _dedup_index_rows(cat.read("pages"), cfg.num_shards).collect()
-        }
-        assert got == want

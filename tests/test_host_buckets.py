@@ -80,7 +80,7 @@ class TestHostStateBucketCOW:
         host in it changed state (was in the batch); all other buckets'
         paths are carried VERBATIM from the parent manifest."""
         cat, cfg, web, snaps = crawl3
-        assert cat.has_bucket_lineage("host_state", snaps[-1])
+        assert cat.bucket_files("host_state", snaps[-1]) is not None
         checked_pairs = 0
         for k in (2, 3):
             prev, cur = snaps[k - 1], snaps[k]
@@ -124,7 +124,7 @@ class TestHostStateBucketCOW:
 class TestRobotsBucketAppend:
     def test_append_only_at_file_level_between_compactions(self, spark, crawl3):
         cat, cfg, web, snaps = crawl3
-        assert cat.has_bucket_lineage("robots", snaps[-1])
+        assert cat.bucket_files("robots", snaps[-1]) is not None
         for k in (2, 3):
             prev, cur = snaps[k - 1], snaps[k]
             if "robots" not in prev.tables:

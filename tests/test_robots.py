@@ -191,15 +191,3 @@ class TestLatestRulesTieBreak:
         pats = {r["path_pattern"] for r in live}
         # only the later fetch (seq 2) applies
         assert pats == {"/b"}, pats
-
-    def test_pre_v3_table_without_fetch_seq_still_works(self, spark):
-        """Tables written before schema_v 3 lack fetch_seq; latest_rules
-        must degrade to the old fetched_at-only behavior, not fail."""
-        from web_scraper_spark.operators.robots import latest_rules, rules_from_corpus
-
-        c = spark.createDataFrame(
-            [("h.example", "User-agent: *\nDisallow: /old\n")], ["host", "body"]
-        )
-        legacy = rules_from_corpus(c, fetched_at=5).drop("fetch_seq")
-        live = latest_rules(legacy).collect()
-        assert {r["path_pattern"] for r in live} == {"/old"}

@@ -235,12 +235,5 @@ def clear_url(cat: Catalog, url: str, num_shards: int) -> dict:
     pages = cat.read("pages")
     if pages is not None:
         out["pages"] = cat.stage("pages", pages.filter(F.col("url") != url))
-    # Catalog.commit now carries unstaged parent tables forward by itself;
-    # the explicit stage_keep loop stays as documentation of intent (and
-    # pins exactly the parent snapshot's versions)
-    snap = cat.current_snapshot()
-    if snap is not None:
-        for t in snap.tables:
-            if t not in out:
-                cat.stage_keep(t, snap)
+    # every other table carries forward through the caller's commit
     return out

@@ -120,7 +120,7 @@ class Catalog:
 
         Exact for append-only lineage (stage_append / stage_append_cow):
         the manifest diff is precisely the appended files. Across a
-        REWRITE boundary (compact, stage, stage_cow on a rewritten shard)
+        REWRITE boundary (compaction, stage, stage_cow on a rewritten shard)
         the diff is conservative — rewritten files have new paths, so
         their rows reappear in the increment (same caveat as Iceberg CDC
         over rewrites); dedup downstream or snapshot before compacting.
@@ -195,15 +195,6 @@ class Catalog:
             self._staged[table] = snapshot.tables[table]
 
     # ------------------------------------------------- partition-level COW
-    def has_bucket_lineage(self, table: str, snapshot: Snapshot | None) -> bool:
-        """True when `table`'s current version was written bucket-pure
-        (stage_cow), so unchanged buckets can be carried at file level."""
-        return bool(
-            snapshot
-            and table in snapshot.tables
-            and "buckets" in snapshot.tables[table]
-        )
-
     def _write_version_cow(self, table: str, df: DataFrame, bucket_col: str) -> dict[str, list[dict]]:
         """Write one immutable version dir partitioned by bucket; return
         {bucket: file-lineage list}. The partition key is a DUPLICATE of
@@ -244,6 +235,13 @@ class Catalog:
                 )
         return buckets
 
+    def _stage_buckets(self, table: str, buckets: dict[str, list[dict]]) -> dict:
+        """Stage a bucket-pure manifest entry from its {bucket: files} map."""
+        files = [f for b in sorted(buckets, key=str) for f in buckets[b]]
+        entry = {"files": files, "rows": sum(f["rows"] for f in files), "buckets": buckets}
+        self._staged[table] = entry
+        return entry
+
     def stage_cow(
         self,
         table: str,
@@ -258,10 +256,8 @@ class Catalog:
         files for `changed_buckets`, whose complete new content must be
         `delta`. A changed bucket absent from `delta` is emptied.
 
-        With `changed_buckets=None`, or when the parent has no bucket
-        lineage (it was last staged via stage()/stage_append()), `delta` is
-        taken as the FULL table and everything is written — which also
-        (re)establishes lineage for subsequent COW commits.
+        With `changed_buckets=None` (or no parent), `delta` is taken as the
+        FULL table and everything is written.
 
         At 10^10-row frontier scale this turns the per-generation frontier
         commit from O(frontier) into O(touched buckets): in steady state a
@@ -269,9 +265,9 @@ class Catalog:
         discovered urls and its seen-skips — a small fraction of the key
         space."""
         snap = snapshot or self.current_snapshot()
-        parent = snap.tables.get(table) if snap and table in snap.tables else None
+        parent = snap.tables.get(table) if snap else None
         new_buckets = self._write_version_cow(table, delta, bucket_col)
-        if changed_buckets is None or parent is None or "buckets" not in parent:
+        if changed_buckets is None or parent is None:
             merged = dict(new_buckets)
         else:
             changed = {str(b) for b in changed_buckets}
@@ -284,14 +280,7 @@ class Catalog:
                 b: fs for b, fs in parent["buckets"].items() if b not in changed
             }
             merged.update(new_buckets)
-        files = [f for b in sorted(merged, key=str) for f in merged[b]]
-        entry = {
-            "files": files,
-            "rows": sum(f["rows"] for f in files),
-            "buckets": merged,
-        }
-        self._staged[table] = entry
-        return entry
+        return self._stage_buckets(table, merged)
 
     def stage_append_cow(
         self,
@@ -312,36 +301,16 @@ class Catalog:
         The delta is pre-shuffled by bucket so each touched bucket lands in
         ~one new file per generation (without this, every write task emits
         one file per bucket it happens to hold → file-count explosion).
-
-        If the parent was last staged WITHOUT bucket lineage (plain
-        stage/stage_append — e.g. a legacy table), this degrades to a plain
-        append: parent files + delta files, no `buckets` key. Readers fall
-        back to the whole-table path until the next stage_cow/compaction
-        re-establishes lineage; correctness is unaffected."""
-        from pyspark.sql import functions as F
-
+        With no parent, the delta becomes the table's first bucket lineage."""
         snap = snapshot or self.current_snapshot()
-        parent = snap.tables.get(table) if snap and table in snap.tables else None
+        parent = snap.tables.get(table) if snap else None
         new_buckets = self._write_version_cow(table, delta, bucket_col)  # clusters by bucket itself
-        new_files = [f for b in sorted(new_buckets, key=str) for f in new_buckets[b]]
-        if parent is not None and "buckets" not in parent:
-            files = list(parent["files"]) + new_files
-            entry = {"files": files, "rows": sum(f["rows"] for f in files)}
-            self._staged[table] = entry
-            return entry
         merged: dict[str, list[dict]] = (
             {b: list(fs) for b, fs in parent["buckets"].items()} if parent else {}
         )
         for b, fs in new_buckets.items():
             merged.setdefault(b, []).extend(fs)
-        files = [f for b in sorted(merged, key=str) for f in merged[b]]
-        entry = {
-            "files": files,
-            "rows": sum(f["rows"] for f in files),
-            "buckets": merged,
-        }
-        self._staged[table] = entry
-        return entry
+        return self._stage_buckets(table, merged)
 
     def bucket_files(
         self, table: str, snapshot: Snapshot | None = None
@@ -404,21 +373,6 @@ class Catalog:
         self._staged = {}
 
     # ------------------------------------------------------------- maintenance
-    def compact(self, table: str, partitions: int | None = None) -> dict:
-        """Stage a rewritten single version of `table` (caller commits).
-
-        Append-only tables (seen/pages/links) accrete one small delta dir
-        per generation; at 10^10-URL scale that is death by file listing.
-        Compaction rewrites the live rows into one right-sized version —
-        the Iceberg rewrite_data_files analog. Old files stay until
-        expire_snapshots removes the snapshots referencing them, so
-        time-travel and concurrent readers are unaffected.
-        """
-        df = self.read(table)
-        if df is None:
-            raise ValueError(f"no such table in current snapshot: {table}")
-        return self.stage(table, df, partitions=partitions)
-
     def expire_snapshots(self, keep_last: int = 5) -> dict:
         """Delete manifests older than the last `keep_last` snapshots and
         any data files no kept snapshot references. Returns counts."""

@@ -9,7 +9,7 @@ Mirrors the reference's compile-time envelope (clean-room, values only):
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 # Politeness / AIMD constants (reference rate_limiter.c:10-14)
 MIN_DELAY = 1.0
@@ -35,7 +35,6 @@ class CrawlConfig:
 
     max_depth: int = 3            # scraper.c:45
     max_pages: int = 1000         # scraper.c:46
-    respect_robots: bool = True   # scraper.c:48
     force_rescrape: bool = False  # scraper.c:53
     user_agent: str = "WebScraperBot/1.0"  # scraper.c:54
     request_timeout: int = 30     # scraper.c:55
@@ -58,14 +57,12 @@ class CrawlConfig:
     http_inbatch_retries: int = 0
 
     # Engine knobs (no reference analog — Spark-side scale controls)
-    seed: int = 42
     horizon: float = 8.0          # politeness window length per generation (s)
     num_shards: int = 32          # seen-set shards (>=4096 at cluster scale)
     # host-keyed state buckets (host_state, robots) — the COW partition
     # grain for per-generation commits/reads of those tables (>=1024 at
     # cluster scale; pinned in the snapshot like num_shards)
     num_host_buckets: int = 32
-    shuffle_partitions: int = 32
     hot_host_salt: int = 8        # number of salt sub-shards for hot hosts
     bloom_fpp: float = 0.01
     oracle_mode: bool = False     # batch-of-1 generations → exact ZSET pop order
@@ -77,15 +74,3 @@ class CrawlConfig:
     # manifests + superseded version dirs. None = keep everything.
     # Time travel and read_incremental stay exact WITHIN the window.
     retention_keep_last: int | None = 128
-    # maintain the ``dedup_index`` catalog table — one (id=url, fp, sh,
-    # shard) row per committed page, appended bucket-pure per generation —
-    # so "train on new data only" consumers can keep-set a later batch via
-    # dedup_keep_ids_incremental(old_index=cat.read("dedup_index", snap))
-    # WITHOUT ever rescanning shipped pages' content (the compute-once
-    # cache-aside contract, content_analyzer.c:420-492 analog). Cost is one
-    # fingerprint+simhash pass over the generation's fetched batch —
-    # O(delta). Turning this on mid-crawl leaves pre-existing pages
-    # unindexed; run crawl.backfill_dedup_index(cat, cfg) once to catch up.
-    maintain_dedup_index: bool = True
-
-    extra_spark_conf: dict = field(default_factory=dict)

@@ -44,8 +44,9 @@ frontier commits via shard-level copy-on-write (Catalog.stage_cow — the
 Iceberg partition-overwrite pattern): only shards touched by an admission,
 a seen-skip, a terminal failure or a new/retried url are recomputed and
 rewritten, every other shard's files carry forward untouched, so the
-frontier commit is O(touched shards) instead of O(frontier). host_state is
-rewritten per generation (it is one row per host — small by construction).
+frontier commit is O(touched shards) instead of O(frontier). seen and
+dedup_index (by shard) and robots and host_state (by host bucket) are
+bucket-pure after every commit in the same way.
 """
 
 from __future__ import annotations
@@ -79,11 +80,11 @@ from .synth import SynthWebConfig
 # Version of the on-disk table schemas this engine writes. Bumped when a
 # committed table gains/changes a column (v3: pages.meta + long crawl_rank,
 # robots.fetch_seq, bucket-pure seen; v4: robots.host_bucket — bucket-pure
-# robots + host_state). Pinned in snapshot metrics exactly
-# like num_shards: resuming onto an older catalog would otherwise
-# stage_append new-schema delta files into old-schema tables, making the
-# read schema depend on which parquet file Spark samples first ('meta'
-# silently vanishing — or the read failing — depending on file order).
+# robots + host_state). Pinned in snapshot metrics exactly like num_shards:
+# resuming onto an older catalog would stage_append new-schema delta files
+# into old-schema tables (a read schema that depends on which parquet file
+# Spark samples first) and meet tables without bucket lineage, so a pre-v4
+# catalog is refused and must be re-crawled.
 SCHEMA_V = 4
 
 
@@ -180,17 +181,15 @@ def run_generation(
             f"snapshot was written with num_host_buckets={stored_hb}; "
             f"resume requires the same value (got {cfg.num_host_buckets})"
         )
-    # schema pin (mirrors the num_shards pin): appending new-schema deltas
-    # onto a pre-upgrade pages/robots table would mix parquet schemas in one
-    # table — run migrate_catalog() once to rewrite them instead
+    # schema pin (mirrors the num_shards pin): see SCHEMA_V
     stored_schema = snap.metrics.get("schema_v")
     if stored_schema != SCHEMA_V and any(
         t in snap.tables for t in ("pages", "robots")
     ):
         raise ValueError(
             f"catalog tables were written with schema_v={stored_schema} "
-            f"(engine is at {SCHEMA_V}); run "
-            f"web_scraper_spark.crawl.migrate_catalog(cat) once to upgrade"
+            f"(engine is at {SCHEMA_V}); a pre-v{SCHEMA_V} catalog cannot be "
+            f"resumed and must be re-crawled"
         )
 
     # budget exhausted: stop BEFORE the pop-gate, leaving the frontier and
@@ -209,20 +208,19 @@ def run_generation(
     # bucket-pure lineage of the seen table (stage_append_cow): both seen
     # gates below verify membership shard-aligned against exactly the
     # touched shards' files — the full table is never shuffled (VERDICT r2
-    # "what's wrong" #1). None (legacy/cleared table) falls back to the
-    # anti-join path.
+    # "what's wrong" #1).
     seen_files = cat.bucket_files("seen", snap)
     sketch_df = cat.read("seen_sketch")
     # robots is NOT read here: the rules table grows with every host ever
     # fetched, and a generation only needs the batch hosts' rules — the
     # bucket-pruned read happens after the batch is known (step 3 below).
-    robots_table_exists = "robots" in snap.tables
-    host_state = cat.read("host_state") or sched.default_host_state(spark)
+    #
     # host_bucket is a persisted partition key, not engine state — drop it
     # on read so every in-memory fold/union stays schema-stable; it is
     # re-derived (pure function of host) at commit time.
-    if "host_bucket" in host_state.columns:
-        host_state = host_state.drop("host_bucket")
+    host_state = (
+        cat.read("host_state") or sched.default_host_state(spark)
+    ).drop("host_bucket")
     failures = cat.read("fetch_failures")
 
     frontier = frontier.cache()
@@ -241,11 +239,9 @@ def run_generation(
     n_skipped = n_frontier - n_candidates
     if n_candidates == 0:
         # drained: every remaining frontier row was already seen — popping
-        # them all (empty frontier) IS the correct final state
-        cat.stage("frontier", candidates.limit(0))
-        for t in ("seen", "seen_sketch", "robots", "host_state", "pages", "links",
-                  "page_images", "fetch_failures"):
-            cat.stage_keep(t, snap)
+        # them all (empty frontier) IS the correct final state; every other
+        # table carries forward through the commit
+        cat.stage_cow("frontier", candidates.limit(0), "shard", None, snap)
         m = dict(snap.metrics)
         m["urls_skipped"] = m.get("urls_skipped", 0) + n_skipped
         m["schema_v"] = SCHEMA_V
@@ -289,13 +285,13 @@ def run_generation(
     # robots_parser.c:398-408): the rules table is committed bucket-pure by
     # host_bucket, so this generation opens ONLY the batch hosts' buckets'
     # files — O(batch-host buckets), never a scan of every rule ever
-    # fetched. Falls back to a full read for a legacy lineage-less table.
+    # fetched. A table that does not exist yet is an empty bucket map.
     now = int(t0)
-    robots_files = cat.bucket_files("robots", snap)
+    robots_files = cat.bucket_files("robots", snap) or {}
     # distinct host buckets of this batch — shared by the robots bucket
     # prune here and the host_state COW commit below (one collect job per
-    # generation, not two). Computed lazily: the legacy full-read path
-    # doesn't need it for robots, but host_state might later.
+    # generation, not two). Computed lazily: with no robots or host_state
+    # files to open (generation 0) neither needs it.
     _batch_hb_cache: list[int] = []
 
     def batch_host_buckets() -> list[int]:
@@ -312,19 +308,11 @@ def run_generation(
             )
         return _batch_hb_cache[0]
 
-    if not robots_table_exists:
-        robots = None
-    elif robots_files is None:
-        robots = cat.read("robots")
-        if robots is not None and "host_bucket" in robots.columns:
-            robots = robots.drop("host_bucket")
-    else:
-        rb_paths = [
-            p for b in batch_host_buckets() for p in robots_files.get(str(b), [])
-        ]
-        robots = (
-            spark.read.parquet(*rb_paths).drop("host_bucket") if rb_paths else None
-        )
+    rb_paths = [
+        p for b in (batch_host_buckets() if robots_files else [])
+        for p in robots_files.get(str(b), [])
+    ]
+    robots = spark.read.parquet(*rb_paths).drop("host_bucket") if rb_paths else None
     need = robots_ops.hosts_needing_robots(batch, robots, now, ROBOTS_TTL_SECONDS)
     if cfg.transport == "http":
         # per-host scheme from this batch's urls (robots_parser.c:183-189
@@ -530,54 +518,39 @@ def run_generation(
         "left_semi",
     )
 
-    _upsert = upsert_frontier  # the shared ZADD-min rule
-
-    if cat.has_bucket_lineage("frontier", snap):
-        # shards with seen-skip drops: cheap per-shard count diff (both
-        # sides cached; the joined result is ≤ num_shards rows)
-        if cfg.force_rescrape:
-            skip_shards = spark.createDataFrame([], "shard int")
-        else:
-            fcnt = frontier.groupBy("shard").agg(F.count(F.lit(1)).alias("fn"))
-            ccnt = candidates.groupBy("shard").agg(F.count(F.lit(1)).alias("cn"))
-            skip_shards = (
-                fcnt.join(ccnt, "shard", "left")
-                .filter(F.coalesce(F.col("cn"), F.lit(0)) != F.col("fn"))
-                .select("shard")
-            )
-        changed_df = (
-            batch.select("shard")
-            .unionByName(new_frontier_rows.select("shard"))
-            .unionByName(skip_shards)
-        )
-        if terminal_keys is not None:
-            changed_df = changed_df.unionByName(
-                candidates.join(terminal_keys, "url_sha1", "left_semi").select("shard")
-            )
-        changed = sorted(int(r["shard"]) for r in changed_df.distinct().collect())
-        keep = candidates.filter(F.col("shard").isin(changed)).join(
-            batch.select("url_sha1"), "url_sha1", "left_anti"
-        )
-        if terminal_keys is not None:
-            keep = keep.join(terminal_keys, "url_sha1", "left_anti")
-        frontier_delta = _upsert(
-            keep.select(*schemas_frontier_cols())
-            .unionByName(retry_rows.select(*schemas_frontier_cols()))
-            .unionByName(new_frontier_rows.select(*schemas_frontier_cols()))
-        )
-        cat.stage_cow("frontier", frontier_delta, "shard", changed, snap)
+    # shards with seen-skip drops: cheap per-shard count diff (both sides
+    # cached; the joined result is ≤ num_shards rows)
+    if cfg.force_rescrape:
+        skip_shards = spark.createDataFrame([], "shard int")
     else:
-        # no bucket lineage yet (first generation after init/reseed):
-        # full rewrite, which establishes lineage for the next commits
-        leftover = candidates.join(batch.select("url_sha1"), "url_sha1", "left_anti")
-        if terminal_keys is not None:
-            leftover = leftover.join(terminal_keys, "url_sha1", "left_anti")
-        frontier_next = _upsert(
-            leftover.select(*schemas_frontier_cols())
-            .unionByName(retry_rows.select(*schemas_frontier_cols()))
-            .unionByName(new_frontier_rows.select(*schemas_frontier_cols()))
+        fcnt = frontier.groupBy("shard").agg(F.count(F.lit(1)).alias("fn"))
+        ccnt = candidates.groupBy("shard").agg(F.count(F.lit(1)).alias("cn"))
+        skip_shards = (
+            fcnt.join(ccnt, "shard", "left")
+            .filter(F.coalesce(F.col("cn"), F.lit(0)) != F.col("fn"))
+            .select("shard")
         )
-        cat.stage_cow("frontier", frontier_next, "shard", None, snap)
+    changed_df = (
+        batch.select("shard")
+        .unionByName(new_frontier_rows.select("shard"))
+        .unionByName(skip_shards)
+    )
+    if terminal_keys is not None:
+        changed_df = changed_df.unionByName(
+            candidates.join(terminal_keys, "url_sha1", "left_semi").select("shard")
+        )
+    changed = sorted(int(r["shard"]) for r in changed_df.distinct().collect())
+    keep = candidates.filter(F.col("shard").isin(changed)).join(
+        batch.select("url_sha1"), "url_sha1", "left_anti"
+    )
+    if terminal_keys is not None:
+        keep = keep.join(terminal_keys, "url_sha1", "left_anti")
+    frontier_delta = upsert_frontier(
+        keep.select(*schemas_frontier_cols())
+        .unionByName(retry_rows.select(*schemas_frontier_cols()))
+        .unionByName(new_frontier_rows.select(*schemas_frontier_cols()))
+    )
+    cat.stage_cow("frontier", frontier_delta, "shard", changed, snap)
 
     # -------- 7 + 8. mark seen, fold host state, update sketches
     batch_keys = (
@@ -624,31 +597,31 @@ def run_generation(
     # the Iceberg rewrite_data_files analog) instead of appended.
     compact_now = cfg.compact_every and (g + 1) % cfg.compact_every == 0
 
+    def _compacted(table, delta, dedup_cols):
+        old = cat.read(table, snap)
+        full = delta if old is None else old.unionByName(delta)
+        # global PK dedup on rewrite (links ON CONFLICT DO NOTHING analog,
+        # data_store.c:151-165 — re-crawled pages under force_rescrape can
+        # rediscover the same edge)
+        return full.dropDuplicates(dedup_cols) if dedup_cols else full
+
     def _append(table, delta, dedup_cols=None):
         if compact_now:
-            old = cat.read(table, snap)
-            full = delta if old is None else old.unionByName(delta)
-            if dedup_cols:
-                # global PK dedup on rewrite (links ON CONFLICT DO NOTHING
-                # analog, data_store.c:151-165 — re-crawled pages under
-                # force_rescrape can rediscover the same edge)
-                full = full.dropDuplicates(dedup_cols)
-            cat.stage(table, full)
+            cat.stage(table, _compacted(table, delta, dedup_cols))
         else:
             cat.stage_append(table, delta, snap)
 
-    # seen is committed BUCKET-PURE: O(delta) append that preserves
-    # file-level shard lineage (compaction rewrites it via stage_cow so
-    # lineage survives the rewrite too) — this is what lets the next
-    # generation's membership checks read O(touched shards) of seen
-    if compact_now:
-        old_seen = cat.read("seen", snap)
-        full_seen = (
-            seen_next_delta if old_seen is None else old_seen.unionByName(seen_next_delta)
-        )
-        cat.stage_cow("seen", full_seen.select("url_sha1", "shard"), "shard", None, snap)
-    else:
-        cat.stage_append_cow("seen", seen_next_delta.select("url_sha1", "shard"), "shard", snap)
+    def _append_cow(table, delta, bucket_col, dedup_cols=None):
+        """_append for a bucket-pure table: both the O(delta) append and
+        the compaction rewrite keep file-level bucket lineage."""
+        if compact_now:
+            cat.stage_cow(table, _compacted(table, delta, dedup_cols), bucket_col, None, snap)
+        else:
+            cat.stage_append_cow(table, delta, bucket_col, snap)
+
+    # seen is committed BUCKET-PURE: this is what lets the next generation's
+    # membership checks read O(touched shards) of seen
+    _append_cow("seen", seen_next_delta.select("url_sha1", "shard"), "shard")
     cat.stage("seen_sketch", sketch_next)
 
     # robots + host_state are committed BUCKET-PURE by host_bucket (r3
@@ -656,68 +629,33 @@ def run_generation(
     # size smaller): the per-generation write cost is O(this generation's
     # delta) and untouched buckets' files carry forward at manifest level.
     _hb = host_bucket_expr(F.col("host"), cfg.num_host_buckets)
-    new_rules_b = new_rules.withColumn("host_bucket", _hb)
-    if not robots_table_exists:
-        # first rules ever: full bucket-pure write establishes lineage
-        cat.stage_cow("robots", new_rules_b, "host_bucket", None, snap)
-    elif compact_now:
-        # compaction rewrites the whole table but KEEPS bucket lineage
-        old_rb = cat.read("robots", snap)
-        if old_rb is None:  # entry exists but holds zero files
-            cat.stage_cow("robots", new_rules_b, "host_bucket", None, snap)
-        else:
-            if "host_bucket" not in old_rb.columns:
-                old_rb = old_rb.withColumn("host_bucket", _hb)
-            cat.stage_cow(
-                "robots", old_rb.unionByName(new_rules_b), "host_bucket", None, snap
-            )
-    else:
-        # O(delta) append of this generation's newly fetched rules only
-        cat.stage_append_cow("robots", new_rules_b, "host_bucket", snap)
+    _append_cow("robots", new_rules.withColumn("host_bucket", _hb), "host_bucket")
 
+    # host_state delta fold: only the batch hosts' new rows (O(batch), never
+    # O(hosts-ever-seen) — rate_limiter.c's O(1) per-domain update). Cached:
+    # it feeds both the carry anti-join and the write below, and Catalyst
+    # would otherwise duplicate the applyInPandas subtree.
     hs_cols = [f.name for f in schemas.HOST_STATE.fields]
-    if cat.has_bucket_lineage("host_state", snap):
-        # delta fold: only the batch hosts' new rows (O(batch), never
-        # O(hosts-ever-seen) — rate_limiter.c's O(1) per-domain update).
-        # Cached: it feeds both the carry anti-join and the write below,
-        # and Catalyst would otherwise duplicate the applyInPandas subtree.
-        hs_updated = sched.fold_host_state(host_state, results, delta_only=True).cache()
-        persists.append(hs_updated)
-        # changed buckets = the batch hosts' buckets (every batch row lands
-        # in fetched/disallowed/failed, so touched hosts == batch hosts);
-        # reuses the robots prune's collect when that path already ran
-        hs_changed = batch_host_buckets()
-        # carry-forward INSIDE changed buckets: untouched hosts sharing a
-        # bucket with a batch host, read from only those buckets' files
-        hs_files = cat.bucket_files("host_state", snap)
-        hs_paths = [p for b in hs_changed for p in hs_files.get(str(b), [])]
-        if hs_paths:
-            hs_carry = (
-                spark.read.parquet(*hs_paths)
-                .select(*hs_cols)
-                .join(hs_updated.select("host"), "host", "left_anti")
-            )
-            hs_delta = hs_updated.select(*hs_cols).unionByName(hs_carry)
-        else:
-            hs_delta = hs_updated.select(*hs_cols)
-        cat.stage_cow(
-            "host_state",
-            hs_delta.withColumn("host_bucket", _hb),
-            "host_bucket",
-            hs_changed,
-            snap,
+    hs_delta = sched.fold_host_state(host_state, results).cache()
+    persists.append(hs_delta)
+    # carry-forward INSIDE changed buckets: untouched hosts sharing a bucket
+    # with a batch host, read from only those buckets' files. The changed
+    # buckets are the batch hosts' buckets (every batch row lands in
+    # fetched/disallowed/failed, so touched hosts == batch hosts). With no
+    # files to carry (generation 0) the delta is the whole table.
+    hs_files = cat.bucket_files("host_state", snap) or {}
+    hs_changed = batch_host_buckets() if hs_files else None
+    hs_paths = [p for b in hs_changed or [] for p in hs_files.get(str(b), [])]
+    if hs_paths:
+        hs_delta = hs_delta.unionByName(
+            spark.read.parquet(*hs_paths)
+            .select(*hs_cols)
+            .join(hs_delta.select("host"), "host", "left_anti")
         )
-    else:
-        # no lineage yet (fresh/legacy catalog): one full bucket-pure
-        # rewrite establishes it for every later generation
-        host_state_next = sched.fold_host_state(host_state, results)
-        cat.stage_cow(
-            "host_state",
-            host_state_next.select(*hs_cols).withColumn("host_bucket", _hb),
-            "host_bucket",
-            None,
-            snap,
-        )
+    cat.stage_cow(
+        "host_state", hs_delta.withColumn("host_bucket", _hb), "host_bucket",
+        hs_changed, snap,
+    )
     _append("pages", pages_new)
 
     # dedup_index maintenance (r4 verdict item 1): one (id=url, fp, sh)
@@ -726,21 +664,12 @@ def run_generation(
     # consumes as ``old_index``, so a "train on new data only" pass over a
     # later batch never rescans shipped pages' content. O(delta) per
     # generation: one md5 + one simhash pass over the fetched batch.
-    if cfg.maintain_dedup_index:
-        idx_delta = _dedup_index_rows(pages_new, cfg.num_shards)
-        if compact_now and "dedup_index" in snap.tables:
-            old_idx = cat.read("dedup_index", snap)
-            full_idx = (
-                idx_delta if old_idx is None else old_idx.unionByName(idx_delta)
-            )
-            # force_rescrape re-fetches can duplicate (id, fp, sh) rows;
-            # compaction is where the exact dups collapse
-            cat.stage_cow(
-                "dedup_index", full_idx.dropDuplicates(["id", "fp", "sh"]),
-                "shard", None, snap,
-            )
-        else:
-            cat.stage_append_cow("dedup_index", idx_delta, "shard", snap)
+    # force_rescrape re-fetches can duplicate (id, fp, sh) rows;
+    # compaction is where the exact dups collapse.
+    _append_cow(
+        "dedup_index", _dedup_index_rows(pages_new, cfg.num_shards), "shard",
+        dedup_cols=["id", "fp", "sh"],
+    )
 
     _append(
         "links",
@@ -834,25 +763,6 @@ def _dedup_index_rows(pages: DataFrame, num_shards: int) -> DataFrame:
     )
 
 
-def backfill_dedup_index(cat: Catalog, cfg: CrawlConfig) -> Catalog:
-    """One-shot index build for a catalog whose pages predate
-    cfg.maintain_dedup_index: rewrites dedup_index bucket-pure from the
-    full pages table (the only time the index costs O(pages); every later
-    generation appends O(delta))."""
-    snap = cat.current_snapshot()
-    assert snap is not None, "nothing to backfill"
-    pages = cat.read("pages")
-    if pages is None:
-        return cat
-    idx = _dedup_index_rows(pages, cfg.num_shards).dropDuplicates(["id", "fp", "sh"])
-    cat.stage_cow("dedup_index", idx, "shard", None, snap)
-    for t in snap.tables:
-        if t != "dedup_index":
-            cat.stage_keep(t, snap)
-    cat.commit(generation=snap.generation, t0=snap.t0, metrics=dict(snap.metrics))
-    return cat
-
-
 def schemas_frontier_cols() -> list[str]:
     return [
         "url", "url_canon", "url_sha1", "host", "shard",
@@ -884,78 +794,6 @@ def upsert_frontier(rows: DataFrame) -> DataFrame:
     )
 
 
-def migrate_catalog(cat: Catalog, num_host_buckets: int | None = None) -> Catalog:
-    """One-shot in-place upgrade of a pre-SCHEMA_V catalog (one snapshot):
-    pages gains a null ``meta`` column and a long ``crawl_rank``; robots
-    gains ``fetch_seq`` (= fetched_at, preserving the old tie behavior for
-    historical rows) and — v4 — a ``host_bucket`` partition key, rewritten
-    bucket-pure so per-generation robots reads/appends prune to the batch
-    hosts' buckets from the first post-migration generation. Reads with
-    mergeSchema so a half-upgraded (mixed-file) table is also repaired.
-    All other tables carry forward untouched (host_state needs no rewrite:
-    the next generation's commit establishes its bucket lineage)."""
-    import os
-
-    from pyspark.sql import types as T
-
-    spark = cat.spark
-    snap = cat.current_snapshot()
-    assert snap is not None, "nothing to migrate"
-    staged: set[str] = set()
-    if "pages" in snap.tables:
-        paths = [
-            os.path.join(cat.root, "pages", f["path"])
-            for f in snap.tables["pages"]["files"]
-        ]
-        pages = spark.read.option("mergeSchema", "true").parquet(*paths)
-        if "meta" not in pages.columns:
-            meta_t = T.ArrayType(
-                T.StructType(
-                    [
-                        T.StructField("key", T.StringType()),
-                        T.StructField("value", T.StringType()),
-                    ]
-                )
-            )
-            pages = pages.withColumn("meta", F.lit(None).cast(meta_t))
-        pages = pages.withColumn("crawl_rank", F.col("crawl_rank").cast("long"))
-        cat.stage("pages", pages)
-        staged.add("pages")
-    if "robots" in snap.tables:
-        r_paths = [
-            os.path.join(cat.root, "robots", f["path"])
-            for f in snap.tables["robots"]["files"]
-        ]
-        robots = spark.read.option("mergeSchema", "true").parquet(*r_paths)
-        if "fetch_seq" not in robots.columns:
-            robots = robots.withColumn("fetch_seq", F.col("fetched_at"))
-        else:
-            # half-upgraded table: mergeSchema surfaces fetch_seq, but rows
-            # from pre-upgrade files carry null — backfill row-wise so the
-            # non-nullable ROBOTS contract (and the tie-break) holds
-            robots = robots.withColumn(
-                "fetch_seq", F.coalesce(F.col("fetch_seq"), F.col("fetched_at"))
-            )
-        if num_host_buckets is None:
-            num_host_buckets = CrawlConfig().num_host_buckets
-        hb = host_bucket_expr(F.col("host"), num_host_buckets)
-        if "host_bucket" not in robots.columns:
-            robots = robots.withColumn("host_bucket", hb)
-        else:
-            robots = robots.withColumn("host_bucket", F.coalesce(F.col("host_bucket"), hb))
-        cat.stage_cow("robots", robots, "host_bucket", None)
-        staged.add("robots")
-    for t in snap.tables:
-        if t not in staged:
-            cat.stage_keep(t, snap)
-    m = dict(snap.metrics)
-    m["schema_v"] = SCHEMA_V
-    if "robots" in staged:
-        m["num_host_buckets"] = num_host_buckets
-    cat.commit(generation=snap.generation, t0=snap.t0, metrics=m)
-    return cat
-
-
 def reseed_crawl(cat: Catalog, seeds: DataFrame, cfg: CrawlConfig) -> Catalog:
     """Re-running the binary with a seed list against existing state
     (main.c:290-310 on a warm Redis): seeds are unioned into the existing
@@ -981,9 +819,6 @@ def reseed_crawl(cat: Catalog, seeds: DataFrame, cfg: CrawlConfig) -> Catalog:
     merged = seed_rows if old is None else old.unionByName(seed_rows)
     merged = upsert_frontier(merged)
     cat.stage_cow("frontier", merged, "shard", None)
-    for t in ("seen", "seen_sketch", "robots", "host_state", "pages", "links",
-              "page_images", "fetch_failures"):
-        cat.stage_keep(t, snap)
     cat.commit(generation=snap.generation, t0=snap.t0, metrics=dict(snap.metrics))
     return cat
 

@@ -241,15 +241,10 @@ def latest_rules(robots: DataFrame) -> DataFrame:
 
     Ties at max(fetched_at) — e.g. a fetched_at=0 test corpus built twice,
     or a same-second refresh — are broken by fetch_seq so exactly ONE
-    fetch's rules apply per host (overwrite-on-refetch, never a mix).
-    Tables written before schema_v 3 lack fetch_seq; fetched_at doubles as
-    the (coarser) key there, preserving the old behavior."""
-    seq = (
-        F.col("fetch_seq") if "fetch_seq" in robots.columns else F.col("fetched_at")
-    )
+    fetch's rules apply per host (overwrite-on-refetch, never a mix)."""
     w = Window.partitionBy("host")
     return (
-        robots.withColumn("_k", F.struct(F.col("fetched_at").alias("f"), seq.alias("s")))
+        robots.withColumn("_k", F.struct("fetched_at", "fetch_seq"))
         .withColumn("_maxk", F.max("_k").over(w))
         .filter(F.col("_k") == F.col("_maxk"))
         .drop("_k", "_maxk")

@@ -280,24 +280,18 @@ def admit_batch(
 _FOLD_RESULT = schemas.HOST_STATE
 
 
-def fold_host_state(
-    host_state: DataFrame,
-    results: DataFrame,
-    delta_only: bool = False,
-) -> DataFrame:
+def fold_host_state(host_state: DataFrame, results: DataFrame) -> DataFrame:
     """Replay rate_limiter_update per host in slot order over the batch.
 
     results: (host, host_rank, fetch_time, status, response_ms). Each host's
     rows are folded sequentially (the C loop is inherently sequential per
     host) but hosts fold in parallel — the same key-parallelism as the rest
-    of the engine. Hosts without results keep their state.
+    of the engine.
 
-    ``delta_only=True`` returns ONLY the touched hosts' new rows (no union
-    with the untouched remainder) — the bucketed COW commit path carries
-    untouched hosts forward at FILE level instead (crawl.run_generation),
-    so the per-generation host-state cost is O(batch hosts), never
-    O(hosts ever seen). Default keeps the full-table semantics for callers
-    without bucket lineage.
+    Returns ONLY the touched hosts' new rows: the bucketed commit carries
+    untouched hosts forward at FILE level (crawl.run_generation), so the
+    per-generation host-state cost is O(batch hosts), never O(hosts ever
+    seen).
     """
     st = host_state.select(
         "host", "min_delay", "current_delay", "last_fetch", "consecutive_errors"
@@ -350,11 +344,7 @@ def fold_host_state(
             }
         )
 
-    updated = joined.groupBy("host").applyInPandas(fold, schema=_FOLD_RESULT)
-    if delta_only:
-        return updated
-    untouched = st.join(res.select("host").distinct(), "host", "left_anti")
-    return updated.unionByName(untouched)
+    return joined.groupBy("host").applyInPandas(fold, schema=_FOLD_RESULT)
 
 
 # --------------------------------------------------------------------------
