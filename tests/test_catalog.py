@@ -127,6 +127,44 @@ class TestCommit:
         assert cat2.read("t").count() == 5  # uncommitted files not referenced
 
 
+class TestConcurrentStaging:
+    def test_no_staged_table_is_lost_across_threads(self, tmp_path):
+        """Tables staged from more threads than cores at once, with a tiny
+        interpreter switch interval, all reach the next commit and leave
+        nothing staged behind (run_generation stages its tables from a
+        thread pool)."""
+        import sys
+        import threading
+
+        from web_scraper_spark.catalog import Snapshot
+
+        cat = Catalog(None, str(tmp_path / "cat"))  # stage_keep/commit need no Spark
+        n_threads, per_thread = 16, 200
+        source = Snapshot(0, None, 0, 0.0, {
+            f"t{i}_{j}": {"files": [], "rows": j}
+            for i in range(n_threads) for j in range(per_thread)
+        })
+
+        def stage(i):
+            for j in range(per_thread):
+                cat.stage_keep(f"t{i}_{j}", source)
+
+        interval = sys.getswitchinterval()
+        sys.setswitchinterval(1e-6)
+        try:
+            threads = [threading.Thread(target=stage, args=(i,)) for i in range(n_threads)]
+            for t in threads:
+                t.start()
+            for t in threads:
+                t.join(timeout=60)
+        finally:
+            sys.setswitchinterval(interval)
+        assert not any(t.is_alive() for t in threads)
+        snap = cat.commit(generation=1, t0=0.0)
+        assert snap.tables == source.tables
+        assert cat._staged == {}
+
+
 class TestAppend:
     def test_append_is_delta_only(self, spark, cat):
         cat.stage("t", df_of(spark, 10, "a"))

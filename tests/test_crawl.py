@@ -10,11 +10,14 @@ The north-rule gates (BASELINE.json):
 """
 
 import math
+import time
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
 
 from oracle_sim import HostState, sha1_hex, simulate
+from web_scraper_spark.catalog import Catalog
 from web_scraper_spark.config import CrawlConfig
 from web_scraper_spark.crawl import (
     init_crawl,
@@ -233,6 +236,108 @@ class TestBucketPureInvariant:
         for k in ("urls_processed", "urls_disallowed", "bytes_downloaded"):
             assert m[k] == sim.metrics[k], k
         assert m["urls_skipped"] == sim.metrics["urls_skipped"] + reseeded
+
+
+class TestFailedGeneration:
+    def test_failed_write_publishes_nothing(self, spark, tmp_path_factory, monkeypatch):
+        """A table write that fails inside the concurrent stage step, or a
+        commit that fails after every write, leaves no staged table behind
+        (a later commit by any caller must not publish a half-written
+        generation), the generation raises, and the retried crawl is still
+        simulator-exact."""
+        web = SynthWebConfig(n_hosts=3, pages_per_host=8)
+        cfg = CrawlConfig(max_pages=12, max_depth=2, horizon=5.0, num_shards=8)
+        cat = init_crawl(
+            spark, str(tmp_path_factory.mktemp("failed_gen")), _seeds_df(spark, web), cfg
+        )
+        run_generation(cat, cfg, web)
+        before = cat.current_snapshot().snapshot_id
+
+        stage_append = Catalog.stage_append
+
+        def failing_links(self, table, *args, **kwargs):
+            entry = stage_append(self, table, *args, **kwargs)
+            if table == "links":  # written and staged, then the step fails
+                raise RuntimeError("injected links write failure")
+            return entry
+
+        monkeypatch.setattr(Catalog, "stage_append", failing_links)
+        with pytest.raises(RuntimeError, match="injected links write failure"):
+            run_generation(cat, cfg, web)
+        assert cat.current_snapshot().snapshot_id == before
+        assert cat._staged == {}
+
+        # a failure after every write has been staged: the commit itself
+        # raises before its publish
+        monkeypatch.undo()
+
+        def failing_commit(self, *args, **kwargs):
+            raise RuntimeError("injected commit failure")
+
+        monkeypatch.setattr(Catalog, "commit", failing_commit)
+        with pytest.raises(RuntimeError, match="injected commit failure"):
+            run_generation(cat, cfg, web)
+        assert cat.current_snapshot().snapshot_id == before
+        assert cat._staged == {}
+
+        monkeypatch.undo()
+        resume_crawl(cat, cfg, web, max_generations=30)
+        sim = simulate(_seed_list(web), cfg, web)
+        order, seen, hs, m = engine_state(cat)
+        assert [u for u, _, _ in order] == [u for _, u, _, _ in sim.crawl_order]
+        assert seen == sim.seen
+        assert hs == {
+            h: (round(s.min_delay, 9), round(s.current_delay, 9), round(s.last_fetch, 9), s.errors)
+            for h, s in sim.host_state.items()
+        }
+        for k in ("urls_processed", "urls_skipped", "urls_disallowed", "bytes_downloaded"):
+            assert m[k] == sim.metrics[k], k
+
+
+class TestJobAttribution:
+    def test_generation_jobs_stay_in_callers_job_group(self, spark, tmp_path_factory):
+        """Every Spark job a generation starts — including those of its
+        concurrent table writes — runs in the caller's job group, so
+        setJobGroup/cancelJobGroup and per-group job counts cover them."""
+        web = SynthWebConfig(n_hosts=3, pages_per_host=8)
+        cfg = CrawlConfig(max_pages=12, max_depth=2, horizon=5.0, num_shards=8)
+        cat = init_crawl(
+            spark, str(tmp_path_factory.mktemp("attribution")), _seeds_df(spark, web), cfg
+        )
+        sc = spark.sparkContext
+        st = sc.statusTracker()
+        group, marker = f"gen-{uuid.uuid4().hex}", f"marker-{uuid.uuid4().hex}"
+
+        def marker_jobs() -> set[int]:
+            """Ids of the jobs of one marker action. Job ids are
+            sequential, so a marker before and one after the generation
+            bracket every job it started."""
+            known = set(st.getJobIdsForGroup(marker))
+            sc.setJobGroup(marker, "bracket")
+            spark.range(1).count()
+            deadline = time.time() + 10
+            while time.time() < deadline:
+                new = set(st.getJobIdsForGroup(marker)) - known
+                if new:
+                    return new
+                time.sleep(0.1)
+            raise AssertionError("the marker job never reached the status store")
+
+        try:
+            first = max(marker_jobs())
+            sc.setJobGroup(group, "run_generation")
+            run_generation(cat, cfg, web)
+            last = min(marker_jobs())
+        finally:
+            for key in ("spark.jobGroup.id", "spark.job.description",
+                        "spark.job.interruptOnCancel"):
+                sc.setLocalProperty(key, None)
+        started = set(range(first + 1, last))
+        assert started, "the generation started no Spark job"
+        deadline = time.time() + 10
+        while not started <= set(st.getJobIdsForGroup(group)) and time.time() < deadline:
+            time.sleep(0.2)  # job-start events reach the status store asynchronously
+        assert started - set(st.getJobIdsForGroup(group)) == set()
 
 
 class TestStressEquivalence:

@@ -718,6 +718,23 @@ class TestVocabOov:
         assert got[2] == (2, 2, 1.0)
         assert got[3] == (0, 0, 0.0)  # blank doc: no ghost '' token
 
+    def test_duplicate_vocab_words_count_once(self, spark):
+        """A vocab frame that repeats a word must not multiply that word's
+        tokens in the left join (n_tokens 4, not 6); the SQL twin agrees."""
+        rows = [(1, "a a b q"), (2, "   ")]
+        df = spark.createDataFrame(rows, "doc_id long, text string")
+        vocab = spark.createDataFrame([("a",), ("a",), ("b",)], "word string")
+        got = {r["doc_id"]: (r["n_tokens"], r["n_oov"], r["oov_rate"])
+               for r in ta.oov_stats(df, vocab).collect()}
+        assert got == {1: (4, 1, 0.25), 2: (0, 0, 0.0)}
+
+        con = duckdb.connect()
+        con.register("docs", df.toPandas())
+        con.register("vocab_words", vocab.toPandas())
+        sql = ta.oov_stats_sql("docs", "SELECT word FROM vocab_words")
+        duck = {int(r[0]): (int(r[1]), int(r[2]), float(r[3])) for r in con.execute(sql).fetchall()}
+        assert duck == got
+
     def test_plan_shapes(self, spark):
         df = spark.createDataFrame([(1, "a b")], "doc_id long, text string")
         vplan = ta.vocab_topk(df, k=10)._jdf.queryExecution().executedPlan().toString()

@@ -30,6 +30,7 @@ from __future__ import annotations
 
 import json
 import os
+import threading
 import uuid
 from dataclasses import dataclass, field
 from typing import Any
@@ -81,6 +82,9 @@ class Catalog:
         self.root = root
         self._manifest_dir = os.path.join(root, "_manifests")
         os.makedirs(self._manifest_dir, exist_ok=True)
+        # one generation stages its tables from several driver threads at
+        # once (crawl.run_generation step 9); the lock keeps _staged whole
+        self._lock = threading.Lock()
         self._staged: dict[str, dict] = {}
 
     # ------------------------------------------------------------- snapshots
@@ -167,7 +171,8 @@ class Catalog:
         Visible only after commit(). Returns the manifest entry."""
         files = self._write_version(table, df, partitions)
         entry = {"files": files, "rows": sum(f["rows"] for f in files)}
-        self._staged[table] = entry
+        with self._lock:
+            self._staged[table] = entry
         return entry
 
     def stage_append(
@@ -186,13 +191,15 @@ class Catalog:
         new_files = self._write_version(table, delta, partitions)
         files = parent_files + new_files
         entry = {"files": files, "rows": sum(f["rows"] for f in files)}
-        self._staged[table] = entry
+        with self._lock:
+            self._staged[table] = entry
         return entry
 
     def stage_keep(self, table: str, snapshot: Snapshot) -> None:
         """Carry a table forward unchanged from `snapshot` (no rewrite)."""
         if table in snapshot.tables:
-            self._staged[table] = snapshot.tables[table]
+            with self._lock:
+                self._staged[table] = snapshot.tables[table]
 
     # ------------------------------------------------- partition-level COW
     def _write_version_cow(self, table: str, df: DataFrame, bucket_col: str) -> dict[str, list[dict]]:
@@ -239,7 +246,8 @@ class Catalog:
         """Stage a bucket-pure manifest entry from its {bucket: files} map."""
         files = [f for b in sorted(buckets, key=str) for f in buckets[b]]
         entry = {"files": files, "rows": sum(f["rows"] for f in files), "buckets": buckets}
-        self._staged[table] = entry
+        with self._lock:
+            self._staged[table] = entry
         return entry
 
     def stage_cow(
@@ -341,7 +349,8 @@ class Catalog:
         parent = self.current_snapshot()
         sid = (parent.snapshot_id + 1) if parent else 0
         tables = dict(parent.tables) if parent else {}
-        tables.update(self._staged)
+        with self._lock:
+            tables.update(self._staged)
         snap = Snapshot(
             snapshot_id=sid,
             parent_id=parent.snapshot_id if parent else None,
@@ -366,11 +375,16 @@ class Catalog:
             f.flush()
             os.fsync(f.fileno())
         os.replace(cur_tmp, cur_final)  # the atomic commit point
-        self._staged = {}
+        with self._lock:
+            self._staged = {}
         return snap
 
     def abort(self) -> None:
-        self._staged = {}
+        """Drop every staged table: the next commit publishes none of
+        them. Their version dirs stay on disk, unreferenced, until
+        expire_snapshots reclaims them."""
+        with self._lock:
+            self._staged = {}
 
     # ------------------------------------------------------------- maintenance
     def expire_snapshots(self, keep_last: int = 5) -> dict:

@@ -375,14 +375,13 @@ def oov_stats(docs, vocab, id_col: str = "doc_id", text_col: str = "text"):
     100 TB shape: the vocab is k rows — explicitly broadcast, so the
     corpus side is explode → broadcast-hash left join → per-doc count
     aggregate; corpus tokens never shuffle on a token key and nothing
-    corpus-sized reaches the driver."""
+    corpus-sized reaches the driver. The vocab is deduplicated first: a
+    repeated word would otherwise match each of its tokens once per copy
+    and inflate n_tokens."""
+    words = vocab.select(F.col("word").alias("w")).distinct()
     hits = (
         _doc_words(docs, id_col, text_col)
-        .join(
-            F.broadcast(vocab.select(F.col("word").alias("w"), F.lit(1).alias("iv"))),
-            "w",
-            "left",
-        )
+        .join(F.broadcast(words.withColumn("iv", F.lit(1))), "w", "left")
         .groupBy(id_col)
         .agg(
             F.count(F.lit(1)).alias("n_tokens"),
@@ -408,9 +407,10 @@ def oov_stats(docs, vocab, id_col: str = "doc_id", text_col: str = "text"):
 
 def oov_stats_sql(table: str, vocab_sql: str, id_col: str = "doc_id", text_col: str = "text") -> str:
     """DuckDB twin of oov_stats; ``vocab_sql`` is a query yielding a
-    ``word`` column (typically vocab_topk_sql of the same table)."""
+    ``word`` column (typically vocab_topk_sql of the same table); it is
+    deduplicated like oov_stats' vocab."""
     return f"""
-      WITH vocab AS ({vocab_sql}),
+      WITH vocab AS (SELECT DISTINCT word FROM ({vocab_sql})),
       words AS (
         SELECT {id_col},
                unnest(regexp_split_to_array(trim(lower({text_col})), '\\s+')) AS w
