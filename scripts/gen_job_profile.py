@@ -9,7 +9,11 @@ use) with ``spark.eventLog.enabled`` set into a temp dir, then prints:
 - the ten call sites with the most summed job wall;
 - jobs per generation;
 - the overlap factor, the jobs' summed wall over the generation's span
-  (below 1: the driver works between jobs; above 1: jobs run concurrently).
+  (below 1: the driver works between jobs; above 1: jobs run concurrently);
+- the plan-description bytes the run posted: Spark renders a physical
+  plan description when each SQL execution starts and again on every
+  adaptive (AQE) stage update, even with the UI off; the count, total
+  and largest of those descriptions.
 
 Usage:
 
@@ -93,7 +97,8 @@ def label_actions(sc) -> None:
 
         setattr(cls, name, wrapper)
 
-    for name in ("collect", "count", "head", "take", "first", "isEmpty", "toPandas"):
+    for name in ("collect", "count", "head", "take", "first", "isEmpty", "toPandas",
+                 "localCheckpoint"):
         wrap(DataFrame, name)
     wrap(DataFrameWriter, "save")
     wrap(DataFrameWriter, "parquet")
@@ -156,13 +161,36 @@ def read_jobs(event_dir: str, group: str) -> list[dict]:
     return [jobs[k] for k in sorted(jobs)]
 
 
+PLAN_EVENTS = (
+    "org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart",
+    "org.apache.spark.sql.execution.ui.SparkListenerSQLAdaptiveExecutionUpdate",
+)
+
+
+def read_plan_bytes(event_dir: str) -> dict:
+    """Count, total and largest `physicalPlanDescription` (UTF-8 bytes)
+    over the run's SQL-execution-start and AQE-update events."""
+    sizes = []
+    for name in sorted(os.listdir(event_dir)):
+        with open(os.path.join(event_dir, name)) as f:
+            for line in f:
+                ev = json.loads(line)
+                if ev["Event"] in PLAN_EVENTS:
+                    sizes.append(len(ev.get("physicalPlanDescription", "").encode()))
+    return {
+        "plan_descriptions": len(sizes),
+        "plan_bytes": sum(sizes),
+        "plan_bytes_max": max(sizes, default=0),
+    }
+
+
 def short_site(site: str) -> str:
     """'collect at /abs/repo/web_scraper_spark/crawl.py:542' → path
     relative to the repository root."""
     return site.replace(ROOT + os.sep, "")
 
 
-def report(jobs: list[dict], t0: float, t1: float) -> None:
+def report(jobs: list[dict], t0: float, t1: float, plans: dict) -> None:
     span = (t1 - t0) / 1000
     for j in jobs:
         j["wall_s"] = (j["end"] - j["start"]) / 1000
@@ -191,6 +219,7 @@ def report(jobs: list[dict], t0: float, t1: float) -> None:
         "overlap_factor": round(job_wall / span, 3) if span > 0 else None,
     }
     print("\n" + " ".join(f"{k}={v}" for k, v in summary.items()))
+    print(" ".join(f"{k}={v}" for k, v in plans.items()))
 
 
 def main() -> int:
@@ -210,7 +239,7 @@ def main() -> int:
             t0, t1 = crawl_one_generation(spark, work)
         finally:
             spark.stop()  # flushes and closes the event log
-        report(read_jobs(event_dir, GROUP), t0, t1)
+        report(read_jobs(event_dir, GROUP), t0, t1, read_plan_bytes(event_dir))
     finally:
         shutil.rmtree(work, ignore_errors=True)
     return 0

@@ -38,6 +38,11 @@ def _seed_list(web):
     return [(r["url"], r["priority"]) for r in seed_url_rows(web)]
 
 
+def cached_rdds(spark) -> set[int]:
+    """Ids of the RDDs whose blocks the executors hold."""
+    return {i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+
 def engine_state(cat):
     pages = cat.read("pages")
     order = [
@@ -244,13 +249,16 @@ class TestFailedGeneration:
         commit that fails after every write, leaves no staged table behind
         (a later commit by any caller must not publish a half-written
         generation), the generation raises, and the retried crawl is still
-        simulator-exact."""
+        simulator-exact. Every generation, failed or not, releases every
+        block it materialized: no RDD it cached outlives it."""
         web = SynthWebConfig(n_hosts=3, pages_per_host=8)
         cfg = CrawlConfig(max_pages=12, max_depth=2, horizon=5.0, num_shards=8)
         cat = init_crawl(
             spark, str(tmp_path_factory.mktemp("failed_gen")), _seeds_df(spark, web), cfg
         )
+        held = cached_rdds(spark)
         run_generation(cat, cfg, web)
+        assert cached_rdds(spark) <= held
         before = cat.current_snapshot().snapshot_id
 
         stage_append = Catalog.stage_append
@@ -266,6 +274,7 @@ class TestFailedGeneration:
             run_generation(cat, cfg, web)
         assert cat.current_snapshot().snapshot_id == before
         assert cat._staged == {}
+        assert cached_rdds(spark) <= held
 
         # a failure after every write has been staged: the commit itself
         # raises before its publish
@@ -279,6 +288,7 @@ class TestFailedGeneration:
             run_generation(cat, cfg, web)
         assert cat.current_snapshot().snapshot_id == before
         assert cat._staged == {}
+        assert cached_rdds(spark) <= held
 
         monkeypatch.undo()
         resume_crawl(cat, cfg, web, max_generations=30)
@@ -292,6 +302,39 @@ class TestFailedGeneration:
         }
         for k in ("urls_processed", "urls_skipped", "urls_disallowed", "bytes_downloaded"):
             assert m[k] == sim.metrics[k], k
+
+
+class TestPlanSize:
+    def test_write_plans_stay_small(self, spark, tmp_path_factory, monkeypatch):
+        """Every table write of a generation plans from materialized
+        leaves, so its plan description (which Spark renders at every SQL
+        execution start and AQE stage update) stays kilobytes. Plan text
+        follows plan shape, not data size: over nested cached frames each
+        cached plan prints inline (3 MB on this 24-page web), over
+        checkpoints a write's plan is ~10 KB."""
+        web = SynthWebConfig(n_hosts=3, pages_per_host=8)
+        cfg = CrawlConfig(max_pages=12, max_depth=2, horizon=5.0, num_shards=8)
+        cat = init_crawl(
+            spark, str(tmp_path_factory.mktemp("plan_size")), _seeds_df(spark, web), cfg
+        )
+        formatted = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+            "formatted"
+        )
+        sizes: dict[str, int] = {}
+
+        def recording(write):
+            def wrapper(self, table, df, *args, **kwargs):
+                sizes[table] = len(df._jdf.queryExecution().explainString(formatted))
+                return write(self, table, df, *args, **kwargs)
+            return wrapper
+
+        monkeypatch.setattr(Catalog, "_write_version", recording(Catalog._write_version))
+        monkeypatch.setattr(
+            Catalog, "_write_version_cow", recording(Catalog._write_version_cow)
+        )
+        assert not run_generation(cat, cfg, web).done
+        assert {"frontier", "seen", "pages", "links"} <= set(sizes)
+        assert max(sizes.values()) < 64 * 1024, sizes
 
 
 class TestJobAttribution:

@@ -439,6 +439,33 @@ class TestBlocklistFilter:
         got = cu.blocklist_filter(df, 0.0).collect()
         assert len(got) == 1 and got[0]["n_banned"] == 0
 
+    def test_punctuation_tabs_and_adjacent_repeats(self, spark):
+        """A term next to punctuation or a tab is one token, and each of
+        n adjacent repeats counts once — in the Column expr and its
+        DuckDB twin alike."""
+        rows = [
+            (1, "badword1. fine"),
+            (2, "fine\tbadword2\tfine"),
+            (3, "spamterm spamterm spamterm"),
+            (4, "(nsfwterm),BADWORD3!"),
+            (5, "spamterms xspamterm fine"),
+        ]
+        want = {1: 1, 2: 1, 3: 3, 4: 2, 5: 0}
+        df = spark.createDataFrame(rows, "doc_id long, text string")
+        got = {
+            r["doc_id"]: r["s"]["n_banned"]
+            for r in df.select("doc_id", cu.blocklist_stats_expr(F.col("text")).alias("s"))
+            .collect()
+        }
+        assert got == want
+        sql = cu.blocklist_stats_sql("text")
+        con = duckdb.connect()
+        twin = {
+            i: con.execute(f"SELECT {sql['n_banned']} FROM (SELECT ? AS text)", [t]).fetchone()[0]
+            for i, t in rows
+        }
+        assert twin == want
+
     def test_custom_list_and_no_python(self, spark):
         df = spark.createDataFrame([(1, "foo bar")], "doc_id long, text string")
         out = cu.blocklist_filter(df, 0.0, terms=["foo"])

@@ -27,7 +27,7 @@ becomes one *generation* of DataFrame transforms over the whole batch
               dedup_index/links/images/fetch_failures CONCURRENTLY: each
               write (and each metric-only count) is its own Spark job from
               one driver thread pool, in the caller's job group; they
-              share cached inputs and meet only at the commit point. Then
+              share materialized inputs and meet only at the commit point. Then
               ONE atomic snapshot publishes them all + per-partition
               lineage + metrics (urls_processed, urls_skipped,
               urls_disallowed, bytes_downloaded — stats.h:8-15; bytes is
@@ -53,6 +53,15 @@ rewritten, every other shard's files carry forward untouched, so the
 frontier commit is O(touched shards) instead of O(frontier). seen and
 dedup_index (by shard) and robots and host_state (by host bucket) are
 bucket-pure after every commit in the same way.
+
+A frame that several steps read (frontier, batch, fetched pages, ...) is
+materialized as a lazy local checkpoint, not a .cache(): a checkpoint is a
+leaf, so every plan built on it stays a few KB. Spark renders a plan's
+description (explainString + SparkPlanInfo) when each SQL execution starts
+and again on every AQE stage update, and nested cached frames print their
+whole cached plans inline — MB per write, ~170 MB of plan text per
+generation of the 64×200 benchmark web. run_generation frees every
+checkpoint when it ends (spark.catalog.clearCache does not reach them).
 """
 
 from __future__ import annotations
@@ -166,28 +175,48 @@ def run_generation(
     If any step raises, the generation publishes nothing: everything
     staged in the catalog is dropped (cat.abort), so no later commit by any
     caller can publish a half-written generation, and every frame the
-    generation cached is unpersisted."""
-    persists: list = []  # every frame the generation caches
+    generation materialized is released, on success and failure alike."""
+    frames: list = []  # every frame the generation materializes
     try:
-        return _generation(cat, cfg, web, persists)
+        return _generation(cat, cfg, web, frames)
     except BaseException:
         cat.abort()
         raise
     finally:
-        for df in persists:
-            df.unpersist()
+        _release(frames)
+
+
+def _release(frames: list[DataFrame]) -> None:
+    """Free the blocks of every registered frame: a local checkpoint's
+    RDD (spark.catalog.clearCache does not reach it) or a frame
+    persisted through an operator's `registry`."""
+    for df in frames:
+        plan = df._jdf.queryExecution().logical()
+        if plan.getClass().getSimpleName() == "LogicalRDD":
+            plan.rdd().unpersist(True)
+        else:
+            df.unpersist(blocking=True)
 
 
 def _generation(
-    cat: Catalog, cfg: CrawlConfig, web: SynthWebConfig, persists: list
+    cat: Catalog, cfg: CrawlConfig, web: SynthWebConfig, frames: list
 ) -> GenerationResult:
-    """run_generation's body; registers every frame it caches in
-    `persists`."""
+    """run_generation's body; registers every frame it materializes in
+    `frames`."""
     spark = cat.spark
+    # the frames behind the checkpoints, held until the generation ends:
+    # Spark drops a garbage-collected plan's SQL-metric accumulators, and
+    # each task that later computes a lazy checkpoint of it would log an
+    # error per metric update
+    sources: list[DataFrame] = []
 
-    def cached(df: DataFrame) -> DataFrame:
-        df = df.cache()
-        persists.append(df)
+    def materialized(df: DataFrame) -> DataFrame:
+        """A lazy local checkpoint of `df`: computed once, at its first
+        action, and a leaf for every plan built on it (see the module
+        docstring). With AQE its shuffle stages run here, at the call."""
+        sources.append(df)
+        df = df.localCheckpoint(eager=False)
+        frames.append(df)
         return df
 
     snap = cat.current_snapshot()
@@ -259,18 +288,21 @@ def _generation(
     ).drop("host_bucket")
     failures = cat.read("fetch_failures")
 
-    frontier = cached(frontier)
+    frontier = materialized(frontier)
 
     # -------- 1. pop-gate: drop frontier rows already seen (urls_skipped).
     # force_rescrape bypasses the visited check (url_processor.c:47-53)
     if cfg.force_rescrape:
         candidates = frontier
-        n_frontier = n_candidates = frontier.count()
     else:
-        candidates = cached(seen_ops.filter_unseen(
+        candidates = seen_ops.filter_unseen(
             frontier, seen, sketch_df, bucket_files=seen_files
-        ))
-        n_frontier = frontier.count()
+        )
+    n_frontier = frontier.count()
+    if candidates is frontier:  # forced, or nothing seen yet
+        n_candidates = n_frontier
+    else:
+        candidates = materialized(candidates)
         n_candidates = candidates.count()
     n_skipped = n_frontier - n_candidates
     if n_candidates == 0:
@@ -304,14 +336,14 @@ def _generation(
     if cfg.oracle_mode:
         batch = sched.admit_batch(
             eligible, host_state, t0, horizon=math.inf,
-            salt=cfg.hot_host_salt, max_batch=1, registry=persists,
+            salt=cfg.hot_host_salt, max_batch=1, registry=frames,
         )
     else:
         batch = sched.admit_batch(
             eligible, host_state, t0, horizon=cfg.horizon,
-            salt=cfg.hot_host_salt, max_batch=budget_left, registry=persists,
+            salt=cfg.hot_host_salt, max_batch=budget_left, registry=frames,
         )
-    batch = cached(batch)
+    batch = materialized(batch)
 
     # -------- 3. robots refresh + decision
     # Bucket-pruned robots read (the per-domain Redis key analog,
@@ -361,9 +393,12 @@ def _generation(
         )
     else:
         fetched_bodies = fetch_src.fetch_robots(need, web)
-    new_rules = robots_ops.rules_from_corpus(fetched_bodies, fetched_at=now, fetch_seq=g + 1)
+    # materialized: the robots write below and robots_batch both read it,
+    # and recomputing it would fetch every robots.txt twice
+    new_rules = materialized(
+        robots_ops.rules_from_corpus(fetched_bodies, fetched_at=now, fetch_seq=g + 1)
+    )
     robots_all = new_rules if robots is None else robots.unionByName(new_rules)
-    robots_all = cached(robots_all)
 
     # restrict the rules table to this batch's hosts up front: the full
     # robots table grows with every host ever crawled and stops being
@@ -372,7 +407,7 @@ def _generation(
     # the crawl-delay application and the decision join only ever need
     # this slice (delay application is an idempotent max, so re-applying
     # on later batches is a no-op).
-    robots_batch = cached(robots_all.join(
+    robots_batch = materialized(robots_all.join(
         batch.select("host").distinct(), "host", "left_semi"
     ))
     host_state = sched.ensure_hosts(host_state, batch)
@@ -380,7 +415,7 @@ def _generation(
 
     _, path_col = split_base_path_exprs(F.col("url_canon"))
     with_path = batch.withColumn("norm_path", normalize_path_expr(path_col))
-    decided = cached(robots_ops.decide_allowed(with_path, robots_batch))
+    decided = materialized(robots_ops.decide_allowed(with_path, robots_batch))
     allowed = decided.filter(F.col("allowed")).drop("allowed", "norm_path")
     disallowed = decided.filter(~F.col("allowed")).drop("allowed", "norm_path")
 
@@ -391,7 +426,7 @@ def _generation(
     # return to the frontier, and are retried after a generation-unit
     # backoff of (attempts-1)*retry_delay, at most retry_count attempts.
     if cfg.transport == "http":
-        fetched_all = cached(fetch_src.fetch_pages_http(
+        fetched_all = materialized(fetch_src.fetch_pages_http(
             allowed,
             timeout_s=float(cfg.request_timeout),
             user_agent=cfg.user_agent,
@@ -399,11 +434,11 @@ def _generation(
             concurrency=cfg.http_concurrency,
         ))
     else:
-        fetched_all = cached(fetch_src.fetch_pages(allowed, web))
-    fetched = cached(fetched_all.filter(F.col("content").isNotNull()))
-    failed = cached(fetched_all.filter(F.col("content").isNull()))
-    n_fetched = fetched.count()
-    n_failed = fetched_all.count() - n_fetched
+        fetched_all = materialized(fetch_src.fetch_pages(allowed, web))
+    fetched = fetched_all.filter(F.col("content").isNotNull())
+    failed = fetched_all.filter(F.col("content").isNull())
+    counts = fetched_all.agg(F.count("content"), F.count(F.lit(1))).first()
+    n_fetched, n_failed = counts[0], counts[1] - counts[0]
 
     prev_attempts = (
         failures.select("url_sha1", "attempts")
@@ -411,7 +446,7 @@ def _generation(
         else spark.createDataFrame([], "url_sha1 string, attempts int")
     )
     backoff = max(1, int(cfg.retry_delay))
-    fail_rows = cached(
+    fail_rows = materialized(
         failed.select("url_sha1", "url_canon", "host")
         .join(prev_attempts, "url_sha1", "left")
         .withColumn("attempts", (F.coalesce(F.col("attempts"), F.lit(0)) + 1).cast("int"))
@@ -429,7 +464,7 @@ def _generation(
 
     # single-pass analysis (P13): one Arrow transfer of content, one parse
     # per document → title/meta/sentiment/links/images together
-    analyzed = cached(
+    analyzed = materialized(
         fetched.withColumn("_an", textops.analyze_udf(F.col("content")))
         .withColumn("title", F.col("_an.title"))
         .withColumn("description", F.col("_an.description"))
@@ -455,7 +490,7 @@ def _generation(
         ranked_pages = analyzed.withColumn("crawl_rank", F.row_number().over(w1))
     else:
         ranked_pages = sched.with_global_rank(
-            analyzed, ["priority", "url_canon"], "crawl_rank", registry=persists
+            analyzed, ["priority", "url_canon"], "crawl_rank", registry=frames
         )
     pages_new = ranked_pages.withColumn(
         # cast BOTH rank paths (oracle row_number int, batched long) to the
@@ -498,7 +533,7 @@ def _generation(
     )
     from .functions.urlops import junk_href
 
-    links_new = cached(
+    links_new = materialized(
         exploded.filter(~junk_href(F.col("href")))  # pre-filter: see junk_href
         .withColumn("to_url", canonicalize(F.col("parent_url"), F.col("href")))
         # canonicalize maps structurally-unresolvable hrefs (e.g. a bare
@@ -541,7 +576,7 @@ def _generation(
     # existing row can only happen INSIDE one shard, so the bucket-local
     # groupBy equals the global one. At 10^10-frontier scale this turns the
     # per-generation frontier commit from O(frontier) into O(touched).
-    new_frontier_rows = cached(new_frontier_rows)
+    new_frontier_rows = materialized(new_frontier_rows)
     retry_rows = candidates.join(
         fail_rows.filter(F.col("next_retry_gen") < F.lit(schemas.GIVEUP_GEN)).select("url_sha1"),
         "url_sha1",
@@ -549,7 +584,7 @@ def _generation(
     )
 
     # shards with seen-skip drops: cheap per-shard count diff (both sides
-    # cached; the joined result is ≤ num_shards rows)
+    # materialized; the joined result is ≤ num_shards rows)
     if cfg.force_rescrape:
         skip_shards = spark.createDataFrame([], "shard int")
     else:
@@ -624,7 +659,7 @@ def _generation(
     )
 
     # -------- 9. stage every table, then ONE atomic commit. The writes
-    # share cached inputs and meet only at the commit point, so they run
+    # share materialized inputs and meet only at the commit point, so they run
     # as concurrent Spark jobs (_stage_concurrently); a failed write leaves
     # nothing staged (run_generation aborts). Every cfg.compact_every generations the append-only tables
     # are rewritten in-commit (small-file compaction — the Iceberg
@@ -670,11 +705,11 @@ def _generation(
     def stage_host_state() -> None:
         # host_state delta fold: only the batch hosts' new rows (O(batch),
         # never O(hosts-ever-seen) — rate_limiter.c's O(1) per-domain
-        # update). Cached: it feeds both the carry anti-join and the write
+        # update). Materialized: it feeds both the carry anti-join and the write
         # below, and Catalyst would otherwise duplicate the applyInPandas
         # subtree.
         hs_cols = [f.name for f in schemas.HOST_STATE.fields]
-        hs_delta = cached(sched.fold_host_state(host_state, results))
+        hs_delta = materialized(sched.fold_host_state(host_state, results))
         # carry-forward INSIDE changed buckets: untouched hosts sharing a
         # bucket with a batch host, read from only those buckets' files.
         # The changed buckets are the batch hosts' buckets (every batch row

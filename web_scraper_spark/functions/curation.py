@@ -701,28 +701,27 @@ FROM sampled s JOIN deduped d USING ({id_col})
 # banned-term density crosses a threshold are dropped or flagged before
 # training. The term list here is a NEUTRAL PLACEHOLDER (a UT1-style
 # deployment swaps in its real blocklist — the operator is list-agnostic);
-# matching is whole-token on the lowercased text via the same
-# substring-count identity the stopword/sentiment family uses, so the
-# decision replays exactly in SQL.
+# the lowercased text is split into word tokens and each token equal to a
+# term counts once; the SQL twin splits and matches the same way, so the
+# decision replays exactly in DuckDB.
 
 BLOCKLIST_DEFAULT = ["badword1", "badword2", "badword3", "spamterm", "nsfwterm"]
 
+# a token is a maximal run of letters, digits and underscores: a term next
+# to punctuation or a tab is still its own token, and each of n adjacent
+# repeats is one token (Java regex and DuckDB's RE2 read the class alike)
+_TOKEN_SPLIT = r"[^\p{L}\p{N}_]+"
+
 
 def blocklist_stats_expr(text: Column, terms: list[str] | None = None) -> Column:
-    """(n_banned, banned_frac) struct: whole-token banned-term
-    occurrences over the lowercased text, and their fraction of the
-    token count (0.0 for blank text). Pure codegen."""
-    from web_scraper_spark.functions.textanalysis import (
-        _count_sub_expr,
-        token_count_expr,
-    )
+    """(n_banned, banned_frac) struct: banned-term tokens of the
+    lowercased text, and their fraction of the whitespace token count
+    (0.0 for blank text). No Python."""
+    from web_scraper_spark.functions.textanalysis import token_count_expr
 
     terms = BLOCKLIST_DEFAULT if terms is None else list(terms)
-    lower = F.concat(F.lit(" "), F.lower(text), F.lit(" "))
-    n = None
-    for t in terms:
-        c = _count_sub_expr(lower, f" {t} ")
-        n = c if n is None else n + c
+    tokens = F.split(F.lower(text), _TOKEN_SPLIT)
+    n = F.size(F.filter(tokens, lambda t: t.isin(terms)))
     toks = token_count_expr(text)
     frac = F.when(toks == 0, F.lit(0.0)).otherwise(
         F.round(n / toks.cast("double"), 6)
@@ -734,14 +733,14 @@ def blocklist_stats_expr(text: Column, terms: list[str] | None = None) -> Column
 
 def blocklist_stats_sql(text: str, terms: list[str] | None = None) -> dict[str, str]:
     """DuckDB twins: {'n_banned': ..., 'banned_frac': ...}."""
-    from web_scraper_spark.functions.textanalysis import (
-        _count_sub_sql,
-        token_count_sql,
-    )
+    from web_scraper_spark.functions.textanalysis import token_count_sql
 
     terms = BLOCKLIST_DEFAULT if terms is None else list(terms)
-    lower = f"(' ' || lower({text}) || ' ')"
-    n = " + ".join(_count_sub_sql(lower, f" {t} ") for t in terms)
+    listed = ", ".join("'" + t.replace("'", "''") + "'" for t in terms) or "NULL"
+    n = (
+        f"len(list_filter(regexp_split_to_array(lower({text}), '{_TOKEN_SPLIT}'), "
+        f"tok -> tok IN ({listed})))"
+    )
     toks = token_count_sql(text)
     frac = (
         f"CASE WHEN ({toks}) = 0 THEN 0.0 "
