@@ -347,36 +347,16 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     q["seen_membership"] = q_seen_membership
 
-    def q_seen_membership_sketch(spark, sf_dir):
-        """Same answer, via the engine's bloom/cuckoo-accelerated path:
-        keys → sha1 → sharded sketches → bloom prefilter → exact anti-join.
-        The oracle proves the sketch path changes nothing (M1 contract)."""
-        from web_scraper_spark.functions.urlops import shard_expr
-        from web_scraper_spark.operators import seen as seen_ops
-
-        o = _t(spark, sf_dir, "orders")
-        seen = o.select(F.sha1(F.col("o_orderkey").cast("string")).alias("url_sha1")).withColumn(
-            "shard", shard_expr(F.col("url_sha1"), 16)
-        )
-        cand = (
-            spark.range(1, 20001)
-            .select(F.col("id").alias("key"))
-            .withColumn("url_sha1", F.sha1(F.col("key").cast("string")))
-            .withColumn("shard", shard_expr(F.col("url_sha1"), 16))
-        )
-        sk = seen_ops.build_sketches(seen, capacity=4096)
-        out = seen_ops.filter_unseen(cand, seen, sk)
-        return out.select("key")
-
-    q["seen_membership_sketch"] = q_seen_membership_sketch
-
     def q_seen_membership_bucketed(spark, sf_dir):
-        """Same answer again, via the round-3 SHARD-ALIGNED path: the seen
-        set committed bucket-pure (Catalog.stage_append_cow) and membership
-        verified by filter_unseen_files — bloom probe + direct pyarrow read
-        of only the touched shards' files, the seen table never planned as
-        a join side. Oracle = the same anti-join SQL, proving the storage
-        layout + file probe change nothing."""
+        """Same answer, via the engine's seen-membership path: keys → sha1
+        → shard, the seen set committed bucket-pure
+        (Catalog.stage_append_cow), per-shard blooms, and filter_unseen's
+        bloom probe + direct pyarrow read of only the touched shards'
+        files — the seen table never planned as a join side. Oracle = the
+        same anti-join SQL, proving the sketches, storage layout and file
+        probe change nothing (M1 contract). Registered under both
+        seen_membership_sketch and seen_membership_bucketed: the sketch
+        path and the bucketed path are one path."""
         import atexit
         import shutil
         import tempfile
@@ -406,6 +386,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
         return out.select("key")
 
+    q["seen_membership_sketch"] = q_seen_membership_bucketed
     q["seen_membership_bucketed"] = q_seen_membership_bucketed
 
     # ---------------- text analysis (P8-P13 + pipeline)
@@ -2761,14 +2742,14 @@ def oracle_sql() -> dict[str, str]:
       )
       SELECT event_type, day, frequency,
              CASE WHEN prev IS NOT NULL THEN round((frequency - prev) / CAST(prev AS DOUBLE), 6) END AS growth_rate,
-             row_number() OVER (ORDER BY frequency DESC, event_type, day) AS rk
+             CAST(row_number() OVER (ORDER BY frequency DESC, event_type, day) AS INTEGER) AS rk
       FROM g QUALIFY rk <= 20
     """
 
     o["top_hosts"] = """
       SELECT host_id, n_urls, rk FROM (
         SELECT user_id AS host_id, count(*) AS n_urls,
-               row_number() OVER (ORDER BY count(*) DESC, user_id) AS rk
+               CAST(row_number() OVER (ORDER BY count(*) DESC, user_id) AS INTEGER) AS rk
         FROM events GROUP BY user_id
       ) WHERE rk <= 10
     """
@@ -2783,7 +2764,7 @@ def oracle_sql() -> dict[str, str]:
     o["link_2hop"] = """
       SELECT c_custkey, n_2hop, rk FROM (
         SELECT c_custkey, count(*) AS n_2hop,
-               row_number() OVER (ORDER BY count(*) DESC, c_custkey) AS rk
+               CAST(row_number() OVER (ORDER BY count(*) DESC, c_custkey) AS INTEGER) AS rk
         FROM customer JOIN orders ON c_custkey = o_custkey
                       JOIN lineitem ON o_orderkey = l_orderkey
         GROUP BY c_custkey
@@ -2801,7 +2782,8 @@ def oracle_sql() -> dict[str, str]:
       WITH fr AS ({_EVENTS_FRONTIER_SQL})
       SELECT host_id, event_id, priority, host_rank FROM (
         SELECT host_id, event_id, priority,
-               row_number() OVER (PARTITION BY host_id ORDER BY priority ASC, url_canon ASC) AS host_rank
+               CAST(row_number() OVER (PARTITION BY host_id ORDER BY priority ASC, url_canon ASC)
+                    AS INTEGER) AS host_rank
         FROM fr
       ) WHERE host_rank <= 3
     """
@@ -2815,13 +2797,14 @@ def oracle_sql() -> dict[str, str]:
         FROM fr
       )
       SELECT host_id, event_id, CAST(host_rank AS INTEGER) AS host_rank,
-             round(host_rank * delay, 6) AS fetch_time
+             CAST(round(host_rank * delay, 6) AS DOUBLE) AS fetch_time
       FROM ranked WHERE host_rank * delay < 5.0
     """
 
     o["priority_reorder"] = """
       SELECT pop_rank, o_orderkey, o_orderpriority FROM (
-        SELECT row_number() OVER (ORDER BY o_orderpriority ASC, o_orderkey ASC) AS pop_rank,
+        SELECT CAST(row_number() OVER (ORDER BY o_orderpriority ASC, o_orderkey ASC) AS INTEGER)
+                 AS pop_rank,
                o_orderkey, o_orderpriority
         FROM orders
       ) WHERE pop_rank <= 100
@@ -3018,7 +3001,7 @@ def oracle_sql() -> dict[str, str]:
       )
       SELECT d.lang,
              count(*) AS n_docs,
-             sum(tokens) AS total_tokens,
+             CAST(sum(tokens) AS BIGINT) AS total_tokens,
              round(sum(CAST(round(quality * 1000000) AS BIGINT))
                    / count(*) / 1e6, 6) AS mean_quality,
              CAST(coalesce(any_value(dupd.n_dup_docs), 0) AS BIGINT) AS n_dup_docs
@@ -3320,7 +3303,8 @@ GROUP BY 1, 2
     )
     o["embedding_sig_neardup"] = f"""
       WITH s AS (SELECT vec_id, CAST({sig_sql} AS BIGINT) AS sig FROM embeddings)
-      SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, bit_count(xor(a.sig, b.sig)) AS hamming
+      SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
+             CAST(bit_count(xor(a.sig, b.sig)) AS INTEGER) AS hamming
       FROM s a JOIN s b ON a.vec_id < b.vec_id
       WHERE bit_count(xor(a.sig, b.sig)) <= 2
     """
@@ -3492,7 +3476,7 @@ GROUP BY 1, 2
     o["image_neardup_lsh"] = f"""
       WITH p(image_id, phash) AS (VALUES {_image_phash_values(512, 42)})
       SELECT a.image_id AS img_a, b.image_id AS img_b,
-             bit_count(xor(a.phash, b.phash)) AS hamming
+             CAST(bit_count(xor(a.phash, b.phash)) AS INTEGER) AS hamming
       FROM p a JOIN p b ON a.image_id < b.image_id
       WHERE bit_count(xor(a.phash, b.phash)) <= 3
     """
@@ -3932,7 +3916,7 @@ GROUP BY 1, 2
         FROM f0
       )
       SELECT a.fid AS frame_a, b.fid AS frame_b,
-             bit_count(xor(a.phash, b.phash)) AS hamming
+             CAST(bit_count(xor(a.phash, b.phash)) AS INTEGER) AS hamming
       FROM f a JOIN f b ON a.fid < b.fid
       WHERE bit_count(xor(a.phash, b.phash)) <= 3
     """

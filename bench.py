@@ -5,9 +5,10 @@ local[$SPARK_GRAFT_CPUS]. Prints ONE JSON line:
  "sf": ..., "urls_per_sec": ...}
 
 The headline mix covers the engine's two surfaces:
-- crawl-side: a full generation-shaped pipeline over a synthetic frontier
-  (identity → bloom-gated seen anti-join → politeness admission → robots
-  decision), plus the raw sketch-accelerated dedup join — the primary
+- crawl-side: a generation-shaped stand-in over a synthetic frontier
+  (identity → plain seen anti-join → politeness admission), the
+  fetch+extract stage, and the engine's seen-membership probe
+  (filter_unseen over a bucket-pure seen table) — the primary
   BASELINE.json metric (URLs fetched+deduped per second) comes from these;
 - pipeline-side: relational/agg/window queries + dedup/similarity/text ops
   at the given scale factor.
@@ -126,34 +127,13 @@ def bench_crawl_fetch_extract(spark, n: int | None = None):
     return out.count()
 
 
-def bench_seen_sketch_dedup(spark):
-    """Sketch-accelerated membership: build per-shard blooms over the seen
-    set, then filter a candidate stream through bloom + exact verify."""
-    from web_scraper_spark.functions.urlops import shard_expr
-    from web_scraper_spark.operators import seen as seen_ops
-
-    n_seen, n_cand, shards = 200_000, 400_000, 64
-    seen = (
-        spark.range(0, n_seen, 1, CPUS)
-        .select(F.sha1(F.col("id").cast("string")).alias("url_sha1"))
-        .withColumn("shard", shard_expr(F.col("url_sha1"), shards))
-    )
-    sk = seen_ops.build_sketches(seen, capacity=1 << 14)
-    cand = (
-        spark.range(0, n_cand, 1, CPUS)
-        .select(F.sha1(F.col("id").cast("string")).alias("url_sha1"))
-        .withColumn("shard", shard_expr(F.col("url_sha1"), shards))
-    )
-    return seen_ops.filter_unseen(cand, seen, sk).count()
-
-
 def make_bench_seen_bucketed(spark):
-    """Round-3 shard-aligned path: the SAME membership workload as
-    seen_sketch_dedup, but the exact check reads the bucket-pure seen
-    table's files shard-aligned (filter_unseen_files) instead of planning
-    the whole seen table as an anti-join build side. Table + sketches are
-    built once during setup (untimed — they are crawl-commit costs, not
-    per-probe costs); the timed thunk is the per-generation probe."""
+    """Seen membership (filter_unseen): 400k candidate keys against a
+    200k-key seen table committed bucket-pure over 64 shards — per-shard
+    bloom probe, then an exact check that reads only the touched shards'
+    files. Table + sketches are built once during setup (untimed — they
+    are crawl-commit costs, not per-probe costs); the timed thunk is the
+    per-generation probe."""
     import atexit
     import shutil
     import tempfile
@@ -200,7 +180,6 @@ def bench_queries(spark):
     return {
         "crawl_generation": lambda: bench_crawl_generation(spark),
         "crawl_fetch_extract": lambda: bench_crawl_fetch_extract(spark),
-        "seen_sketch_dedup": lambda: bench_seen_sketch_dedup(spark),
         "seen_bucketed_dedup": make_bench_seen_bucketed(spark),
         "pricing_summary": run("pricing_summary"),
         "trend_topk": run("trend_topk"),

@@ -1,8 +1,7 @@
-"""Shard-aligned seen membership over a bucket-pure table (round-3 item 1).
+"""Shard-aligned seen membership over a bucket-pure table.
 
-Evidence the verdict asked for:
-- exactness: filter_unseen_files ≡ the pure anti-join on every input,
-  with and without sketches;
+- exactness: filter_unseen ≡ the pure anti-join on every input, with
+  and without sketches;
 - locality: a shard with no candidates (or whose candidates are all
   bloom-certain-new) NEVER opens a seen file — proven by poisoning the
   untouched shards' manifest paths;

@@ -135,6 +135,9 @@ class TestNativeCanonicalizeParity:
         "a/./b", "a/../b", "./.", "..", ".", "a/b/../../c", "x/../../y",
         "p?q=2#frag", "./q#f", "spaces in href", "trailing//", "//",
         "///x", "//#frag", "//h", "////",
+        # embedded newlines: the trailing-slash strip looks at the last
+        # character only (a '$' anchor would also match before a final \n)
+        "dir/\n", "/abs/\n", "a\n/", "\n", "x/\n/", "../\n/",
     ]
     BASES = [
         "http://h1.example.test/a/b/page.html",
@@ -171,6 +174,30 @@ class TestNativeCanonicalizeParity:
         want = [None if pd.isna(x) else str(x) for x in want_s]
         for (b, h), g, w in zip(rows, got, want):
             assert g == w, (b, h, g, w)
+
+    def test_compiles_without_codegen_fallback(self, spark, tmp_path):
+        """The expression fits whole-stage codegen: with the interpreted
+        fallback off, a projection of canonicalize must execute (a CASE
+        tree inlined once per reference overflows the 64 KB method
+        limit, and Spark then runs the stage interpreted)."""
+        from web_scraper_spark.functions.urlops import canonicalize
+
+        # two plain string columns read from parquet, like the crawl's
+        # (parent_url, href): a projection over local rows is folded by
+        # the optimizer and never compiled
+        rows = [(f"http://h.test/a/{i}/p.html", f"../x/{i}/") for i in range(8)]
+        spark.createDataFrame(rows, ["base", "href"]).write.parquet(str(tmp_path / "in"))
+        prev = spark.conf.get("spark.sql.codegen.fallback")
+        spark.conf.set("spark.sql.codegen.fallback", "false")
+        try:
+            df = spark.read.parquet(str(tmp_path / "in"))
+            got = [
+                r["c"]
+                for r in df.select(canonicalize(F.col("base"), F.col("href")).alias("c")).collect()
+            ]
+        finally:
+            spark.conf.set("spark.sql.codegen.fallback", prev)
+        assert sorted(got) == sorted(f"http://h.test/a/x/{i}" for i in range(8))
 
     @settings(max_examples=120, deadline=None)
     @given(st.text(alphabet="ab/.?#:", min_size=0, max_size=18))

@@ -303,8 +303,8 @@ class Catalog:
         per-bucket lineage + this delta's per-bucket files. Write cost is
         O(delta) like stage_append, but file-level bucket lineage survives,
         so readers can open exactly the buckets they need (bucket_files) —
-        what makes the seen-set anti-join shard-aligned instead of an
-        O(table) shuffle every generation.
+        what makes seen membership (seen.filter_unseen) shard-aligned
+        instead of an O(table) shuffle every generation.
 
         The delta is pre-shuffled by bucket so each touched bucket lands in
         ~one new file per generation (without this, every write task emits

@@ -106,6 +106,8 @@ from .synth import SynthWebConfig
 # catalog is refused and must be re-crawled.
 SCHEMA_V = 4
 
+FRONTIER_COLS = schemas.FRONTIER.fieldNames()
+
 
 @dataclass
 class GenerationResult:
@@ -125,6 +127,24 @@ def _with_identity(df: DataFrame, num_shards: int) -> DataFrame:
     )
 
 
+def _seed_rows(seeds: DataFrame, discovered_at: int, num_shards: int) -> DataFrame:
+    """Frontier rows for a (url, priority) seed list: canonicalized
+    against a placeholder base, depth 0, no parent; unresolvable urls
+    dropped."""
+    rows = (
+        seeds.select(
+            F.col("url"),
+            canonicalize(F.lit("http://seed.invalid/"), F.col("url")).alias("url_canon"),
+            F.col("priority").cast("int").alias("priority"),
+        )
+        .filter(F.col("url_canon").isNotNull())
+        .withColumn("depth", F.lit(0))
+        .withColumn("parent_url", F.lit(None).cast("string"))
+        .withColumn("discovered_at", F.lit(discovered_at).cast("long"))
+    )
+    return _with_identity(rows, num_shards).select(*FRONTIER_COLS)
+
+
 def init_crawl(
     spark: SparkSession,
     catalog_root: str,
@@ -134,23 +154,8 @@ def init_crawl(
     """Bootstrap snapshot 0: seeds → frontier (enqueue-seed analog,
     main.c:290-310), empty seen/robots/host_state."""
     cat = Catalog(spark, catalog_root)
-    frontier = (
-        seeds.select(
-            F.col("url"),
-            canonicalize(F.lit("http://seed.invalid/"), F.col("url")).alias("url_canon"),
-            F.col("priority").cast("int").alias("priority"),
-        )
-        .filter(F.col("url_canon").isNotNull())
-        .withColumn("depth", F.lit(0))
-        .withColumn("parent_url", F.lit(None).cast("string"))
-        .withColumn("discovered_at", F.lit(0).cast("long"))
-    )
-    frontier = _with_identity(frontier, cfg.num_shards).select(
-        "url", "url_canon", "url_sha1", "host", "shard",
-        "priority", "depth", "parent_url", "discovered_at",
-    )
     # ZADD upsert on the seed list itself (duplicate seeds keep min priority)
-    frontier = upsert_frontier(frontier)
+    frontier = upsert_frontier(_seed_rows(seeds, 0, cfg.num_shards))
     # bucket-pure COW write from the start: generation 1 can already carry
     # untouched shards at file level
     cat.stage_cow("frontier", frontier, "shard", None)
@@ -613,9 +618,9 @@ def _generation(
         if terminal_keys is not None:
             keep = keep.join(terminal_keys, "url_sha1", "left_anti")
         frontier_delta = upsert_frontier(
-            keep.select(*schemas_frontier_cols())
-            .unionByName(retry_rows.select(*schemas_frontier_cols()))
-            .unionByName(new_frontier_rows.select(*schemas_frontier_cols()))
+            keep.select(*FRONTIER_COLS)
+            .unionByName(retry_rows.select(*FRONTIER_COLS))
+            .unionByName(new_frontier_rows.select(*FRONTIER_COLS))
         )
         cat.stage_cow("frontier", frontier_delta, "shard", changed, snap)
 
@@ -626,15 +631,16 @@ def _generation(
         .join(failed.select("url_sha1"), "url_sha1", "left_anti")
     )
     seen_next_delta = batch_keys.dropDuplicates(["url_sha1"])
-    if cfg.force_rescrape and seen is not None:
+    if cfg.force_rescrape:
         # force bypasses the pop-gate, so the batch can contain urls that
         # are ALREADY seen — appending them again would duplicate keys in
         # the bucket-pure seen table forever (compaction unions without a
         # key dedup) and double-insert cuckoo fingerprints. Keep the seen
-        # table exactly-once per key.
-        seen_next_delta = seen_next_delta.join(
-            seen.select("url_sha1"), "url_sha1", "left_anti"
-        )
+        # table exactly-once per key. Materialized: the seen and sketch
+        # writes both read the delta, and each would rerun the probe.
+        seen_next_delta = materialized(seen_ops.filter_unseen(
+            seen_next_delta, seen, sketch_df, bucket_files=seen_files
+        ))
 
     def stage_sketch() -> None:
         # autoscale: a shard whose key count outgrows its bloom is rebuilt
@@ -884,13 +890,6 @@ def _dedup_index_rows(pages: DataFrame, num_shards: int) -> DataFrame:
     )
 
 
-def schemas_frontier_cols() -> list[str]:
-    return [
-        "url", "url_canon", "url_sha1", "host", "shard",
-        "priority", "depth", "parent_url", "discovered_at",
-    ]
-
-
 def upsert_frontier(rows: DataFrame) -> DataFrame:
     """ZADD-min upsert on url_canon — the single frontier-merge rule
     (shared by init/reseed/generation): duplicate discoveries collapse to
@@ -911,7 +910,7 @@ def upsert_frontier(rows: DataFrame) -> DataFrame:
             F.min("parent_url").alias("parent_url"),
             F.min("discovered_at").alias("discovered_at"),
         )
-        .select(*schemas_frontier_cols())
+        .select(*FRONTIER_COLS)
     )
 
 
@@ -924,18 +923,7 @@ def reseed_crawl(cat: Catalog, seeds: DataFrame, cfg: CrawlConfig) -> Catalog:
     skipped at the pop gate."""
     snap = cat.current_snapshot()
     assert snap is not None
-    seed_rows = (
-        seeds.select(
-            F.col("url"),
-            canonicalize(F.lit("http://seed.invalid/"), F.col("url")).alias("url_canon"),
-            F.col("priority").cast("int").alias("priority"),
-        )
-        .filter(F.col("url_canon").isNotNull())
-        .withColumn("depth", F.lit(0))
-        .withColumn("parent_url", F.lit(None).cast("string"))
-        .withColumn("discovered_at", F.lit(snap.generation).cast("long"))
-    )
-    seed_rows = _with_identity(seed_rows, cfg.num_shards).select(*schemas_frontier_cols())
+    seed_rows = _seed_rows(seeds, snap.generation, cfg.num_shards)
     old = cat.read("frontier")
     merged = seed_rows if old is None else old.unionByName(seed_rows)
     merged = upsert_frontier(merged)

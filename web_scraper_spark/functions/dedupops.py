@@ -800,7 +800,7 @@ def simhash_pairs_sql(
     sh = simhash_sql(text_col)
     return f"""
 WITH sh AS (SELECT {id_col} AS id, {sh} AS sh FROM {table})
-SELECT a.id AS doc_a, b.id AS doc_b, bit_count(xor(a.sh, b.sh)) AS hamming
+SELECT a.id AS doc_a, b.id AS doc_b, CAST(bit_count(xor(a.sh, b.sh)) AS INTEGER) AS hamming
 FROM sh a JOIN sh b ON a.id < b.id
 WHERE bit_count(xor(a.sh, b.sh)) <= {max_hamming}
 """

@@ -1004,7 +1004,7 @@ def semdedup_keep_ids(
     # the threshold test keeps the boundary decision oracle-identical.
     id_type = corpus.schema[id_col].dataType.simpleString()
 
-    def _drops(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def _drops(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("_id").reset_index(drop=True)
         ids = pdf["_id"].to_numpy()
         if len(ids) < 2:

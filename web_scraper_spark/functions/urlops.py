@@ -181,11 +181,12 @@ def canonicalize_expr(base: Column, href: Column) -> Column:
         dotted = F.regexp_replace(dotted, _DOT_SELF, "$1")
         dotted = F.regexp_replace(dotted, _DOT_PARENT, "$1")
     resolved = F.when(resolved.contains("/."), dotted).otherwise(resolved)
-    # strip ONE trailing slash when len > 1 (extract_hrefs.c:68-71)
-    resolved = F.when(
-        resolved.endswith("/") & (F.length(resolved) > 1),
-        resolved.substr(F.lit(1), F.length(resolved) - 1),
-    ).otherwise(resolved)
+    # strip ONE trailing slash when len > 1 (extract_hrefs.c:68-71). One
+    # reference to `resolved`: a when() over it would inline its CASE tree
+    # once per reference and overflow the 64 KB generated-method limit.
+    # (?s) and \z (not $, which also matches before a final newline) keep
+    # hrefs with newlines on the kernel's endswith("/") rule.
+    resolved = F.regexp_replace(resolved, r"(?s)^(.+)/\z", "$1")
 
     # malformed base: the pandas kernel's extracts yield <NA> which
     # propagates through concat → null result — but Spark regexp_extract

@@ -141,11 +141,11 @@ def token_budget_sample_sql(
     ordered = f"""
       ordered AS (
         SELECT {id_col}, {stratum_col}, {tokens_col},
-               sum({tokens_col}) OVER (
+               CAST(sum({tokens_col}) OVER (
                  PARTITION BY {stratum_col}
                  ORDER BY {priority_col} DESC, {id_col} ASC
                  ROWS UNBOUNDED PRECEDING
-               ) AS cum_tokens
+               ) AS BIGINT) AS cum_tokens
         FROM {table} WHERE {tokens_col} > 0
       )"""
     if isinstance(budget_tokens, dict):
@@ -467,11 +467,11 @@ def temperature_budget_sample_sql(
       ),
       ordered AS (
         SELECT {id_col}, {stratum_col}, {tokens_col},
-               sum({tokens_col}) OVER (
+               CAST(sum({tokens_col}) OVER (
                  PARTITION BY {stratum_col}
                  ORDER BY {priority_col} DESC, {id_col} ASC
                  ROWS UNBOUNDED PRECEDING
-               ) AS cum_tokens
+               ) AS BIGINT) AS cum_tokens
         FROM src
       )
       SELECT o.{id_col}, o.{stratum_col}, o.{tokens_col}, o.cum_tokens

@@ -305,7 +305,7 @@ def fold_host_state(host_state: DataFrame, results: DataFrame) -> DataFrame:
     )
     joined = res.join(st, "host", "left")
 
-    def fold(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def fold(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("host_rank")
         first = pdf.iloc[0]
         min_delay = float(first["min_delay"]) if pd.notna(first["min_delay"]) else MIN_DELAY
@@ -323,17 +323,7 @@ def fold_host_state(host_state: DataFrame, results: DataFrame) -> DataFrame:
                 # waits BEFORE the robots check, url_processor.c:97-118) but
                 # contributes no AIMD update (rate_limiter_update not called)
                 continue
-            if status >= 400:
-                errors += 1
-                if errors >= MAX_CONSECUTIVE_ERRORS:
-                    delay = min(delay * ERROR_PENALTY, MAX_DELAY)
-                    errors = 0
-            else:
-                errors = 0
-                if rt > delay:
-                    delay = min(delay * SLOW_FACTOR, MAX_DELAY)
-                elif rt < delay / 2:
-                    delay = max(delay * FAST_FACTOR, min_delay)
+            delay, errors = aimd_update_py(delay, min_delay, errors, status, rt)
         return pd.DataFrame(
             {
                 "host": [key[0]],

@@ -1,4 +1,4 @@
-"""Partition-sharded URL-seen set: exact anti-join + bloom/cuckoo sketches.
+"""Partition-sharded URL-seen set: bucket-pure seen table + bloom/cuckoo sketches.
 
 Reference semantics being reproduced (clean-room):
 - ``is_visited``        — SISMEMBER visited_urls (redis_helper.c:210-227)
@@ -9,22 +9,22 @@ Reference semantics being reproduced (clean-room):
 Spark design (SURVEY.md §2.4 M1):
 - authoritative: ``seen(url_sha1, shard)`` table, sharded by a *stable*
   function of the sha1 itself (urlops.shard_expr — not Spark's hash, so
-  shard assignment survives restarts / different clusters);
+  shard assignment survives restarts / different clusters) and committed
+  bucket-pure (Catalog.stage_append_cow / stage_cow), so every file holds
+  one shard's keys;
 - accelerator: one bloom + one cuckoo per shard (sketches.py), stored as
   binary rows in the ``seen_sketch`` checkpoint table;
-- membership = bloom short-circuit for definite-negatives, exact
-  anti-join only for the "maybe" rows. At 10^10-URL scale the bloom
-  prefilter keeps the sort-merge anti-join probe side to the tiny
-  maybe-fraction (~fpp of genuinely-new URLs + true rehits); the sketch
-  rows themselves are ~1.2 MB/10^6 keys at 1% fpp, broadcast per
-  generation.
-- deletes (force_rescrape / cache_clear_url, cache.c:300-320) remove rows
-  from ``seen`` AND delete from the cuckoo (bloom can't delete; it simply
-  goes stale-conservative until the next rebuild, which only costs spurious
-  "maybe"s, never wrong answers).
+- membership (filter_unseen) is ONE path: a shard-cogrouped probe that
+  short-circuits the bloom's definite negatives and verifies only the
+  "maybe" rows against that shard's seen files (an Arrow is_in over one
+  shard's keys). The seen table is never planned as a join side.
+- deletes (cache_clear_url, cache.c:300-320 — api.clear_url) rewrite
+  ``seen`` without the key; the bloom cannot delete and simply goes
+  stale-conservative until the next rebuild, which only costs spurious
+  "maybe"s, never wrong answers.
 
-Correctness NEVER depends on a sketch: every "maybe" is verified by the
-exact join; a bloom miss is a proof of absence (no false negatives).
+Correctness NEVER depends on a sketch: every "maybe" is verified against
+the seen files; a bloom miss is a proof of absence (no false negatives).
 """
 
 from __future__ import annotations
@@ -41,33 +41,6 @@ DEFAULT_SHARD_CAPACITY = 1 << 17  # keys per shard before sketch rebuild
 
 
 # --------------------------------------------------------------------------
-# sketch table <-> python
-# --------------------------------------------------------------------------
-
-
-def collect_sketches(sketch_df: DataFrame | None) -> dict[int, tuple[bytes, bytes, int]]:
-    """Sketch table → {shard: (bloom_bytes, cuckoo_bytes, n)}. TEST/DEBUG
-    helper only — the engine probes and folds sketches executor-side via
-    shard cogroups (tag_maybe_seen / update_sketches), never collecting
-    them: at 10^10-key scale the sketch table is >10 GB and a per-generation
-    driver collect + rebroadcast would dominate the commit."""
-    if sketch_df is None:
-        return {}
-    return {
-        r["shard"]: (bytes(r["bloom"]), bytes(r["cuckoo"]), r["n"])
-        for r in sketch_df.collect()
-    }
-
-
-def empty_sketch(capacity: int, fpp: float) -> tuple[bytes, bytes, int]:
-    return (
-        Bloom.for_capacity(capacity, fpp).to_bytes(),
-        Cuckoo.for_capacity(capacity).to_bytes(),
-        0,
-    )
-
-
-# --------------------------------------------------------------------------
 # membership / dedup
 # --------------------------------------------------------------------------
 
@@ -76,7 +49,10 @@ def tag_maybe_seen(candidates: DataFrame, sketch_df: DataFrame | None) -> DataFr
     """Add ``maybe_seen:boolean`` by probing the sketch TABLE executor-side.
 
     False ⇒ certainly NOT in the seen set (bloom has no false negatives);
-    True ⇒ must be verified by the exact anti-join. Shard with no sketch
+    True ⇒ maybe seen (filter_unseen verifies those rows against the
+    shard's files). filter_unseen probes the bloom inside its own task;
+    this standalone tag exists for measurement — perfbench's tracer
+    computes ``seen.bloom_maybe_share`` with it. Shard with no sketch
     row ⇒ shard never written ⇒ False (shard ids are a stable function of
     the sha1 and num_shards is pinned in the snapshot metadata, so a
     missing row really means empty).
@@ -100,7 +76,7 @@ def tag_maybe_seen(candidates: DataFrame, sketch_df: DataFrame | None) -> DataFr
     )
     cols = [f.name for f in candidates.schema.fields]
 
-    def probe(key, cand_pdf: pd.DataFrame, sk_pdf: pd.DataFrame) -> pd.DataFrame:
+    def probe(key: tuple, cand_pdf: pd.DataFrame, sk_pdf: pd.DataFrame) -> pd.DataFrame:
         cand_pdf = cand_pdf[cols].copy()
         if cand_pdf.empty or sk_pdf.empty:
             cand_pdf["maybe_seen"] = False
@@ -122,36 +98,14 @@ def filter_unseen(
     sketch_df: DataFrame | None = None,
     bucket_files: dict[str, list[str]] | None = None,
 ) -> DataFrame:
-    """Rows of `candidates` whose url_sha1 is NOT in the seen set.
+    """Rows of `candidates` (url_sha1 + shard columns) whose url_sha1 is
+    NOT in the bucket-pure seen table.
 
-    candidates must carry url_sha1 + shard columns. With a sketch table,
-    the expensive exact check probes only the bloom-"maybe" slice; the
-    definite-negative slice bypasses it entirely.
-
-    With `bucket_files` (Catalog.bucket_files of a bucket-pure seen table)
-    the exact check is SHARD-ALIGNED: see filter_unseen_files. Without it,
-    the fallback is the plain anti-join — which shuffles+sorts the ENTIRE
-    seen table every call (the round-2 verdict's last O(table) cost).
-    """
-    if seen is None and bucket_files is None:
-        return candidates
-    if bucket_files is not None:
-        return filter_unseen_files(candidates, bucket_files, sketch_df)
-    if sketch_df is None:
-        return candidates.join(seen.select("url_sha1"), "url_sha1", "left_anti")
-    tagged = tag_maybe_seen(candidates, sketch_df)
-    certain_new = tagged.filter(~F.col("maybe_seen")).drop("maybe_seen")
-    maybe = tagged.filter(F.col("maybe_seen")).drop("maybe_seen")
-    verified_new = maybe.join(seen.select("url_sha1"), "url_sha1", "left_anti")
-    return certain_new.unionByName(verified_new)
-
-
-def filter_unseen_files(
-    candidates: DataFrame,
-    bucket_files: dict[str, list[str]],
-    sketch_df: DataFrame | None = None,
-) -> DataFrame:
-    """Shard-aligned exact unseen filter over a BUCKET-PURE seen table.
+    `bucket_files` is that table's lineage (Catalog.bucket_files); it is
+    what the check reads. `seen` is the committed table itself: with no
+    lineage, a missing table means nothing is seen yet and `candidates`
+    is returned as is, while a table without lineage is refused — the
+    engine commits seen bucket-pure only.
 
     ONE shard-cogrouped applyInPandas fuses the whole membership check:
     each task holds one shard's candidate slice next to that shard's
@@ -161,7 +115,7 @@ def filter_unseen_files(
     is_in. The reference analog is the O(1) Redis SISMEMBER
     (redis_helper.c:210-227).
 
-    Scale shape vs the anti-join fallback:
+    Scale shape:
     - the seen table is NEVER shuffled, sorted, or even planned as a join
       build side — per generation it costs sequential columnar I/O on the
       shards that have bloom-maybe candidates, and ZERO on every other
@@ -187,6 +141,13 @@ def filter_unseen_files(
     Correctness never depends on a sketch: with sketch_df=None every row
     is treated as "maybe" and verified against the files.
     """
+    if bucket_files is None:
+        if seen is None:
+            return candidates
+        raise ValueError(
+            "seen table has no bucket lineage: filter_unseen needs "
+            "bucket_files (Catalog.bucket_files of the committed table)"
+        )
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
@@ -219,7 +180,7 @@ def filter_unseen_files(
         )
     )
 
-    def probe(key, cand_pdf: pd.DataFrame, sk_pdf: pd.DataFrame) -> pd.DataFrame:
+    def probe(key: tuple, cand_pdf: pd.DataFrame, sk_pdf: pd.DataFrame) -> pd.DataFrame:
         import numpy as np
 
         cand = cand_pdf[cols]
@@ -264,53 +225,9 @@ def filter_unseen_files(
     )
 
 
-def membership(
-    urls: DataFrame,
-    seen: DataFrame | None,
-    num_shards: int,
-    url_col: str = "url_sha1",
-) -> DataFrame:
-    """Exact membership flags: (url_sha1, is_seen). The SISMEMBER analog
-    as a set operator (left-semi style via left join + null check)."""
-    if seen is None:
-        return urls.select(F.col(url_col).alias("url_sha1")).withColumn(
-            "is_seen", F.lit(False)
-        )
-    # distinct: one output row per probed url even if a (legacy) seen
-    # table carries duplicate keys — a plain left join would multiply
-    s = seen.select("url_sha1").distinct().withColumn("is_seen", F.lit(True))
-    return (
-        urls.select(F.col(url_col).alias("url_sha1"))
-        .join(s, "url_sha1", "left")
-        .withColumn("is_seen", F.coalesce("is_seen", F.lit(False)))
-    )
-
-
 # --------------------------------------------------------------------------
-# appends / deletes / sketch maintenance
+# sketch maintenance
 # --------------------------------------------------------------------------
-
-
-def append_seen(seen: DataFrame | None, new_keys: DataFrame, num_shards: int) -> DataFrame:
-    """mark_visited_bulk analog: seen ∪ new (new_keys: url_sha1 [,shard]).
-
-    The caller commits the result as one snapshot — the MULTI/EXEC atomicity
-    analog. new_keys are assumed pre-deduped against seen (filter_unseen)."""
-    cols = new_keys.columns
-    nk = new_keys
-    if "shard" not in cols:
-        nk = nk.withColumn("shard", shard_expr(F.col("url_sha1"), num_shards))
-    nk = nk.select("url_sha1", "shard").dropDuplicates(["url_sha1"])
-    if seen is None:
-        return nk
-    return seen.select("url_sha1", "shard").unionByName(nk)
-
-
-def delete_seen(seen: DataFrame | None, del_keys: DataFrame) -> DataFrame | None:
-    """cache_clear_url / force_rescrape analog: seen ∖ del (anti-join)."""
-    if seen is None:
-        return None
-    return seen.join(del_keys.select("url_sha1"), "url_sha1", "left_anti")
 
 
 def update_sketches(
@@ -346,7 +263,7 @@ def update_sketches(
             d = deletes.select("url_sha1", "shard")
         changes = changes.unionByName(d.withColumn("op", F.lit(-1)))
 
-    def fold(key, ch_pdf: pd.DataFrame, sk_pdf: pd.DataFrame) -> pd.DataFrame:
+    def fold(key: tuple, ch_pdf: pd.DataFrame, sk_pdf: pd.DataFrame) -> pd.DataFrame:
         shard = int(key[0])
         if ch_pdf.empty:
             # untouched shard: carry its row forward byte-identically
@@ -457,7 +374,7 @@ def build_sketches(
     (used on bootstrap and when a shard outgrows its bloom capacity)."""
     cap, f = capacity, fpp
 
-    def build(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def build(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         shard = int(key[0])
         keys = pdf["url_sha1"].to_numpy()
         bloom = Bloom.for_capacity(max(cap, 2 * len(keys)), f)

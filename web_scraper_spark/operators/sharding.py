@@ -170,9 +170,9 @@ def shard_positions_sql(
     key = md5_60_sql(f"'{salt + 1}:' || {sid}")
     return f"""
         SELECT {id_col}, shard,
-               (ROW_NUMBER() OVER (PARTITION BY shard
-                                   ORDER BY shuffle_key, {id_col}) - 1)
-                 AS shard_pos
+               CAST(ROW_NUMBER() OVER (PARTITION BY shard
+                                       ORDER BY shuffle_key, {id_col}) - 1
+                    AS INTEGER) AS shard_pos
         FROM (SELECT {id_col},
                      CAST({shard} AS INT) AS shard,
                      {key} AS shuffle_key
@@ -200,8 +200,8 @@ def shard_manifest_sql(
     return f"""
         SELECT CAST({shard} AS INT) AS shard,
                COUNT(*) AS n_docs,
-               SUM(CAST({ntok} AS BIGINT)) AS n_tokens,
-               SUM({term}) % {_CKSUM_MOD} AS content_ck
+               CAST(SUM(CAST({ntok} AS BIGINT)) AS BIGINT) AS n_tokens,
+               CAST(SUM({term}) % {_CKSUM_MOD} AS BIGINT) AS content_ck
         FROM {table}
         GROUP BY 1
     """
@@ -412,9 +412,9 @@ def pair_shard_manifest_sql(
     return f"""
         SELECT CAST({shard} AS INT) AS shard,
                COUNT(*) AS n_pairs,
-               SUM(CAST({ntok} AS BIGINT)) AS n_caption_tokens,
-               SUM(CAST({bytes_len_sql} AS BIGINT)) AS n_image_bytes,
-               SUM({term}) % {_CKSUM_MOD} AS content_ck
+               CAST(SUM(CAST({ntok} AS BIGINT)) AS BIGINT) AS n_caption_tokens,
+               CAST(SUM(CAST({bytes_len_sql} AS BIGINT)) AS BIGINT) AS n_image_bytes,
+               CAST(SUM({term}) % {_CKSUM_MOD} AS BIGINT) AS content_ck
         FROM {table}
         GROUP BY 1
     """

@@ -17,6 +17,7 @@ FRONTIER = T.StructType(
         T.StructField("url_canon", T.StringType(), False),
         T.StructField("url_sha1", T.StringType(), False),
         T.StructField("host", T.StringType(), True),
+        T.StructField("shard", T.IntegerType(), False),
         T.StructField("priority", T.IntegerType(), False),
         T.StructField("depth", T.IntegerType(), False),
         T.StructField("parent_url", T.StringType(), True),

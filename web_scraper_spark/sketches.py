@@ -4,16 +4,16 @@ The reference's URL-seen set is one Redis SET behind a global mutex
 (redis_helper.c:19,210-262) — O(1) membership but a single-node consistency
 bottleneck. The north rule shards it: the *authoritative* seen set is a
 partitioned table (operators/seen.py) and these per-shard sketches are the
-O(1) accelerator consulted before the exact anti-join:
+O(1) accelerator consulted before the exact per-shard check:
 
 - bloom: definite-negative short-circuit (a URL whose bloom probe misses is
-  certainly unseen → skips the shuffle-join probe side entirely);
+  certainly unseen → never reaches the shard's seen files);
 - cuckoo: supports *deletion*, which bloom cannot — needed for the
   force_rescrape / cache_clear_url path (reference cache.c:300-320,
   url_processor.c:47-53) without rebuilding the sketch.
 
-False positives are harmless: a bloom/cuckoo "maybe" is always verified by
-the exact anti-join, so correctness never depends on the sketch (SURVEY.md
+False positives are harmless: a bloom "maybe" is always verified against
+the shard's seen files, so correctness never depends on the sketch (SURVEY.md
 §2.4 M1).
 
 Keys are SHA1 hex strings; all probe positions are derived from independent
