@@ -1883,84 +1883,47 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         """JOINT image+caption keep-set (pairs.pair_keep_ids): drop a
         training pair when the image is a phash near-dup of a smaller id
         OR the caption is an exact/simhash near-dup of a smaller id.
-        Boilerplate captions are injected on ids ending in 7 (the same
-        CASE is applied in the oracle) so the caption stage provably
-        fires alongside the synth corpus's built-in image near-dups.
-        Both stages pigeonhole-exact -> fully value-oracled."""
-        from web_scraper_spark import synth
+        Boilerplate captions are injected on ids ending in 7 so the
+        caption stage provably fires alongside the synth corpus's
+        built-in image near-dups. Both stages pigeonhole-exact -> fully
+        value-oracled (pairs.pair_keep_ids_sql)."""
         from web_scraper_spark.operators import pairs as pairs_ops
 
-        imgs = synth.images_df(spark, 512, seed=42).select(
-            "image_id", "phash", "caption"
+        imgs = _synth_pairs(
+            spark, ("image_id", "phash", "caption"), "7", _BOILER_CAPTION
         )
-        imgs = imgs.withColumn(
-            "caption",
-            F.when(
-                F.substring("image_id", 14, 1) == "7", F.lit(_BOILER_CAPTION)
-            ).otherwise(F.col("caption")),
-        )
-        # cache the SYNTHESIZED input: the operator scans it once per
-        # derivation (phash drops, caption fp, caption simhash, final
-        # join) — cheap columnar rescans on a real parquet table, but
-        # here each rescan re-synthesizes 512 image payloads
-        from web_scraper_spark.functions.dedupops import register_op_cache
-
-        imgs = register_op_cache(imgs)
         return pairs_ops.pair_keep_ids(imgs)
 
     q["pair_keep_set"] = q_pair_keep_set
 
+    # The pair_corpus_clean family: the full multimodal composite
+    # (pairs.pair_corpus_clean — geometry >= 1024 decoded pixels, aspect
+    # <= 4, caption >= 4 tokens, then the joint image+caption keep-set)
+    # with one optional gate switched on per query. Each injects a caption
+    # on one id digit so its gate (or the caption dedup) provably fires;
+    # every stage is exact, so each is value-oracled end to end against
+    # pairs.pair_corpus_clean_sql.
+
     def q_pair_corpus_clean(spark, sf_dir):
-        """Full multimodal pipeline composite (pairs.pair_corpus_clean):
-        geometry filter (>=1024 decoded pixels, aspect <= 4) + caption
-        token filter (>= 4 tokens) + the joint image+caption keep-set.
-        Boilerplate captions injected on ids ending in 3 so the caption
-        stage provably fires after the filters; every stage exact ->
-        value-oracled end to end."""
-        from web_scraper_spark import synth
+        """No optional gate; boilerplate captions on ids ending in 3."""
         from web_scraper_spark.operators import pairs as pairs_ops
 
-        imgs = synth.images_df(spark, 512, seed=42).select(
-            "image_id", "w", "h", "fmt", "caption", "phash"
-        )
-        imgs = imgs.withColumn(
-            "caption",
-            F.when(
-                F.substring("image_id", 14, 1) == "3", F.lit(_BOILER_CAPTION)
-            ).otherwise(F.col("caption")),
-        )
-        # pair_corpus_clean caches its scored survivors, but the filter
-        # itself would still re-synthesize per branch without this
-        from web_scraper_spark.functions.dedupops import register_op_cache
-
-        imgs = register_op_cache(imgs)
+        imgs = _synth_pairs(spark, _PAIR_COLS, "3", _BOILER_CAPTION)
         return pairs_ops.pair_corpus_clean(imgs)
 
     q["pair_corpus_clean"] = q_pair_corpus_clean
 
     def q_pair_corpus_clean_quality(spark, sf_dir):
-        """pair_corpus_clean with the DECODE-side quality gate enabled:
-        geometry + caption-token filters (codegen, before any pixel
-        work) → quality_struct_udf inline on the survivors (blurry /
-        near-constant images drop; sharp_milli/ent_milli ride along) →
-        the joint image+caption keep-set. The complete image+caption
-        curation flagship, value-oracled end to end — the oracle replays
-        the gate from sequentially re-derived quality integers."""
-        from web_scraper_spark import synth
+        """The DECODE-side quality gate: quality_struct_udf inline on the
+        metadata-gate survivors (blurry / near-constant images drop;
+        sharp_milli/ent_milli ride along) — the complete image+caption
+        curation flagship. The oracle replays the gate from sequentially
+        re-derived quality integers."""
         from web_scraper_spark.operators import pairs as pairs_ops
 
-        imgs = synth.images_df(spark, 512, seed=42).select(
-            "image_id", "bytes", "w", "h", "fmt", "caption", "phash"
+        imgs = _synth_pairs(
+            spark, (*_PAIR_COLS, "bytes"), "3", _BOILER_CAPTION
         )
-        imgs = imgs.withColumn(
-            "caption",
-            F.when(
-                F.substring("image_id", 14, 1) == "3", F.lit(_BOILER_CAPTION)
-            ).otherwise(F.col("caption")),
-        )
-        from web_scraper_spark.functions.dedupops import register_op_cache
-
-        imgs = register_op_cache(imgs)
         return pairs_ops.pair_corpus_clean(
             imgs, min_sharp_milli=2_000_000, min_ent_milli=4_000
         )
@@ -1968,26 +1931,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["pair_corpus_clean_quality"] = q_pair_corpus_clean_quality
 
     def q_pair_corpus_clean_lang(spark, sf_dir):
-        """pair_corpus_clean with the caption-language gate: geometry +
-        caption-token filters → keep only captions identified as English
-        or unknown (marker-argmax lang id, pure codegen — the LAION-style
-        per-language corpus cut) → the joint keep-set. German captions
-        injected on ids ending in 7 so the gate provably fires; fully
-        value-oracled with lang_id replayed identically in SQL."""
-        from web_scraper_spark import synth
-        from web_scraper_spark.functions.dedupops import register_op_cache
+        """The caption-language gate: keep only captions identified as
+        English or unknown (marker-argmax lang id, pure codegen — the
+        LAION-style per-language corpus cut). German captions on ids
+        ending in 7."""
         from web_scraper_spark.operators import pairs as pairs_ops
 
-        imgs = synth.images_df(spark, 512, seed=42).select(
-            "image_id", "w", "h", "fmt", "caption", "phash"
-        )
-        imgs = imgs.withColumn(
-            "caption",
-            F.when(
-                F.substring("image_id", 14, 1) == "7", F.lit(_GERMAN_CAPTION)
-            ).otherwise(F.col("caption")),
-        )
-        imgs = register_op_cache(imgs)
+        imgs = _synth_pairs(spark, _PAIR_COLS, "7", _GERMAN_CAPTION)
         return pairs_ops.pair_corpus_clean(
             imgs, allowed_langs=("en", "und")
         )
@@ -1995,48 +1945,31 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["pair_corpus_clean_lang"] = q_pair_corpus_clean_lang
 
     def q_pair_corpus_clean_safe(spark, sf_dir):
-        """pair_corpus_clean with the caption SAFETY gate: geometry +
-        caption-token filters → zero-tolerance banned-term cut
+        """The caption SAFETY gate: zero-tolerance banned-term cut
         (curation.blocklist_filter's whole-token rule as pure codegen,
-        banned_frac riding on survivors) → the joint keep-set. Captions
-        containing a banned term injected on ids ending in 9 so the gate
-        provably fires; fully value-oracled."""
-        from web_scraper_spark import synth
-        from web_scraper_spark.functions.dedupops import register_op_cache
+        banned_frac riding on survivors). Banned-term captions on ids
+        ending in 9."""
         from web_scraper_spark.operators import pairs as pairs_ops
 
-        imgs = synth.images_df(spark, 512, seed=42).select(
-            "image_id", "w", "h", "fmt", "caption", "phash"
-        )
-        imgs = imgs.withColumn(
-            "caption",
-            F.when(
-                F.substring("image_id", 14, 1) == "9", F.lit(_BANNED_CAPTION)
-            ).otherwise(F.col("caption")),
-        )
-        imgs = register_op_cache(imgs)
+        imgs = _synth_pairs(spark, _PAIR_COLS, "9", _BANNED_CAPTION)
         return pairs_ops.pair_corpus_clean(imgs, max_banned_frac=0.0)
 
     q["pair_corpus_clean_safe"] = q_pair_corpus_clean_safe
 
     def q_pair_corpus_clean_aligned(spark, sf_dir):
-        """pair_corpus_clean with the CLIP-score alignment gate in its
-        production position: geometry + caption-token filters → alignment
-        >= 0.9 on the (image_emb, caption_emb) columns an upstream
-        inference stage attached (JVM cosine, before any pixel work) →
-        the joint keep-set. Pair k carries embedding vector k % n_emb on
-        both sides (alignment 1.0) except every 9th pair, whose caption
-        side reads the NEXT vector (near-orthogonal in this corpus →
-        provably dropped). The embedding attachment is two equi-joins on
-        vec_id replayed identically in SQL; n_emb enters as one bounded
-        driver scalar (the oracle's scalar-subquery twin)."""
-        from web_scraper_spark import synth
+        """The CLIP-score alignment gate in its production position:
+        alignment >= 0.9 on the (image_emb, caption_emb) columns an
+        upstream inference stage attached (JVM cosine, before any pixel
+        work). Pair k carries embedding vector k % n_emb on both sides
+        (alignment 1.0) except every 9th pair, whose caption side reads
+        the NEXT vector (near-orthogonal in this corpus → provably
+        dropped). The embedding attachment is two equi-joins on vec_id
+        replayed identically in SQL; n_emb enters as one bounded driver
+        scalar (the oracle's scalar-subquery twin)."""
         from web_scraper_spark.functions.dedupops import register_op_cache
         from web_scraper_spark.operators import pairs as pairs_ops
 
-        imgs = synth.images_df(spark, 512, seed=42).select(
-            "image_id", "w", "h", "fmt", "caption", "phash"
-        )
+        imgs = _synth_pairs(spark, _PAIR_COLS)
         e = _t(spark, sf_dir, "embeddings").select(
             "vec_id", F.col("embedding").cast("array<double>").alias("emb")
         )
@@ -2221,6 +2154,29 @@ _BOILER_CAPTION = "stock photo of a sunset over the ocean"
 _GERMAN_CAPTION = "der hund ist nicht gross und die katze ist klein"
 _BANNED_CAPTION = "photo of spamterm content right here"
 
+_PAIR_COLS = ("image_id", "w", "h", "fmt", "caption", "phash")
+
+
+def _synth_pairs(spark, cols, digit=None, caption=None) -> DataFrame:
+    """synth.images_df(512, seed 42) projected to ``cols``, with
+    ``caption`` on the ids whose last digit is ``digit`` (_pair_src_sql is
+    the oracle side), cached: the pair operators scan their input once per
+    derivation (phash drops, caption fp, caption simhash, final join), and
+    each rescan would re-synthesize 512 image payloads."""
+    from web_scraper_spark import synth
+    from web_scraper_spark.functions.dedupops import register_op_cache
+
+    imgs = synth.images_df(spark, 512, seed=42).select(*cols)
+    if digit is not None:
+        imgs = imgs.withColumn(
+            "caption",
+            F.when(
+                F.substring("image_id", 14, 1) == digit, F.lit(caption)
+            ).otherwise(F.col("caption")),
+        )
+    return register_op_cache(imgs)
+
+
 # crawl_dedup_incremental corpus: phase A crawls a 2-host web (links can
 # only target hosts 0-1 — _out_links buckets by cfg.n_hosts), phase B
 # resumes the SAME catalog against the 4-host web with hosts 2-3 seeded,
@@ -2362,24 +2318,6 @@ SELECT url FROM new_t WHERE url NOT IN (SELECT id FROM drops)
 
 
 @functools.lru_cache(maxsize=4)
-def _image_pair_values(n: int, seed: int) -> str:
-    """(image_id, phash, caption) VALUES literal for the pair_keep_set
-    oracle — same deterministic synth rows as the Spark query, derived
-    without Spark (pure pandas/numpy). Captions are SQL-escaped (the
-    wordlist includes quotes-free non-ASCII; escaping is still applied
-    defensively)."""
-    import pandas as pd
-
-    from web_scraper_spark import synth
-
-    pdf = synth.images_pdf(pd.Series(range(n)), seed)
-    return ", ".join(
-        "('{}', {}, '{}')".format(i, p, c.replace("'", "''"))
-        for i, p, c in zip(pdf["image_id"], pdf["phash"], pdf["caption"])
-    )
-
-
-@functools.lru_cache(maxsize=4)
 def _image_pair_full_values(n: int, seed: int) -> str:
     """(image_id, w, h, fmt, caption, phash) VALUES literal for the
     pair_corpus_clean oracle."""
@@ -2394,6 +2332,21 @@ def _image_pair_full_values(n: int, seed: int) -> str:
         )
         for r in pdf.itertuples()
     )
+
+
+def _pair_src_sql(digit: str | None = None, caption: str | None = None) -> str:
+    """The oracle side of _synth_pairs: CTEs ``p0`` (the synth rows) and
+    ``src`` (the raw pair columns, with ``caption`` on the ids whose last
+    digit is ``digit``)."""
+    cap = "caption0"
+    if digit is not None:
+        cap = (
+            f"CASE WHEN substr(image_id, 14, 1) = '{digit}' "
+            f"THEN '{caption}' ELSE caption0 END"
+        )
+    return f"""p0(image_id, w, h, fmt, caption0, phash) AS
+        (VALUES {_image_pair_full_values(512, 42)}),
+      src AS (SELECT image_id, w, h, fmt, {cap} AS caption, phash FROM p0)"""
 
 
 @functools.lru_cache(maxsize=1)
@@ -3481,258 +3434,53 @@ GROUP BY 1, 2
       WHERE bit_count(xor(a.phash, b.phash)) <= 3
     """
 
+    from web_scraper_spark.operators import pairs as pairs_ops
+
     o["image_keep_set"] = f"""
       WITH p(image_id, phash) AS (VALUES {_image_phash_values(512, 42)}),
-      drops AS (
-        SELECT DISTINCT b.image_id FROM p a JOIN p b
-          ON a.image_id < b.image_id
-         AND bit_count(xor(a.phash, b.phash)) <= 3
-      )
+      drops AS ({pairs_ops.neardup_image_ids_sql("p", 3)})
       SELECT image_id, phash FROM p
       WHERE image_id NOT IN (SELECT image_id FROM drops)
     """
 
-    _pair_vals = _image_pair_values(512, 42)
-    _cap_sh = dedupops.simhash_sql("caption")
-    from web_scraper_spark.functions.textanalysis import md5_60_sql as _md5_60_sql
-
-    _cap_fp = _md5_60_sql("caption")
     o["pair_keep_set"] = f"""
-      WITH p0(image_id, phash, caption0) AS (VALUES {_pair_vals}),
-      p AS (
-        SELECT image_id, phash,
-               CASE WHEN substr(image_id, 14, 1) = '7'
-                    THEN '{_BOILER_CAPTION}' ELSE caption0 END AS caption
-        FROM p0
-      ),
-      img_drops AS (
-        SELECT DISTINCT b.image_id FROM p a JOIN p b
-          ON a.image_id < b.image_id
-         AND bit_count(xor(a.phash, b.phash)) <= 3
-      ),
-      fp AS (SELECT image_id AS id, {_cap_fp} AS fp FROM p),
-      exact_drops AS (
-        SELECT f.id FROM fp f
-        JOIN (SELECT fp, min(id) AS m FROM fp GROUP BY fp) g
-          ON f.fp = g.fp AND f.id <> g.m
-      ),
-      sh AS (SELECT image_id AS id, {_cap_sh} AS sh FROM p),
-      near_drops AS (
-        SELECT DISTINCT b.id FROM sh a JOIN sh b ON a.id < b.id
-        WHERE bit_count(xor(a.sh, b.sh)) <= 3
-      )
-      SELECT image_id, phash, caption FROM p
-      WHERE image_id NOT IN (SELECT image_id FROM img_drops)
-        AND image_id NOT IN (
-          SELECT id FROM exact_drops UNION SELECT id FROM near_drops)
+      WITH {_pair_src_sql("7", _BOILER_CAPTION)},
+      p AS (SELECT image_id, phash, caption FROM src)
+      SELECT * FROM ({pairs_ops.pair_keep_ids_sql("p")})
     """
 
-    _pair_full = _image_pair_full_values(512, 42)
-    from web_scraper_spark.functions.textanalysis import token_count_sql as _tok_sql
-
-    _cap_tok = _tok_sql("caption")
-    o["pair_corpus_clean"] = f"""
-      WITH p0(image_id, w, h, fmt, caption0, phash) AS (VALUES {_pair_full}),
-      p1 AS (
-        SELECT image_id, w, h, fmt, phash,
-               CASE WHEN substr(image_id, 14, 1) = '3'
-                    THEN '{_BOILER_CAPTION}' ELSE caption0 END AS caption
-        FROM p0
-      ),
-      p AS (
-        SELECT image_id, w, h, fmt, caption, phash,
-               CAST(w * h AS BIGINT) AS n_pixels,
-               round(greatest(w, h) / least(w, h), 6) AS aspect,
-               CAST({_cap_tok} AS INTEGER) AS caption_tokens
-        FROM p1
-        WHERE w * h >= 1024
-          AND greatest(w, h) / least(w, h) <= 4.0
-          AND {_cap_tok} >= 4
-      ),
-      img_drops AS (
-        SELECT DISTINCT b.image_id FROM p a JOIN p b
-          ON a.image_id < b.image_id
-         AND bit_count(xor(a.phash, b.phash)) <= 3
-      ),
-      fp AS (SELECT image_id AS id, {_cap_fp} AS fp FROM p),
-      exact_drops AS (
-        SELECT f.id FROM fp f
-        JOIN (SELECT fp, min(id) AS m FROM fp GROUP BY fp) g
-          ON f.fp = g.fp AND f.id <> g.m
-      ),
-      sh AS (SELECT image_id AS id, {_cap_sh} AS sh FROM p),
-      near_drops AS (
-        SELECT DISTINCT b.id FROM sh a JOIN sh b ON a.id < b.id
-        WHERE bit_count(xor(a.sh, b.sh)) <= 3
-      )
-      SELECT image_id, w, h, fmt, caption, phash,
-             n_pixels, aspect, caption_tokens
-      FROM p
-      WHERE image_id NOT IN (SELECT image_id FROM img_drops)
-        AND image_id NOT IN (
-          SELECT id FROM exact_drops UNION SELECT id FROM near_drops)
+    def pair_clean(src_ctes: str, table: str = "src", **gates) -> str:
+        return f"""
+      WITH {src_ctes}
+      SELECT * FROM ({pairs_ops.pair_corpus_clean_sql(table, **gates)})
     """
 
-    # pair_corpus_clean_lang: the same closure with the caption-language
-    # gate between the token filter and the dedup stages — lang_id_sql
-    # replays the marker-argmax rule identically.
-    _cap_lang = ta.lang_id_sql("caption")
-    o["pair_corpus_clean_lang"] = f"""
-      WITH p0(image_id, w, h, fmt, caption0, phash) AS (VALUES {_pair_full}),
-      p1 AS (
-        SELECT image_id, w, h, fmt, phash,
-               CASE WHEN substr(image_id, 14, 1) = '7'
-                    THEN '{_GERMAN_CAPTION}' ELSE caption0 END AS caption
-        FROM p0
-      ),
-      p AS (
-        SELECT image_id, w, h, fmt, caption, phash,
-               CAST(w * h AS BIGINT) AS n_pixels,
-               round(greatest(w, h) / least(w, h), 6) AS aspect,
-               CAST({_cap_tok} AS INTEGER) AS caption_tokens,
-               {_cap_lang} AS caption_lang
-        FROM p1
-        WHERE w * h >= 1024
-          AND greatest(w, h) / least(w, h) <= 4.0
-          AND {_cap_tok} >= 4
-          AND ({_cap_lang}) IN ('en', 'und')
-      ),
-      img_drops AS (
-        SELECT DISTINCT b.image_id FROM p a JOIN p b
-          ON a.image_id < b.image_id
-         AND bit_count(xor(a.phash, b.phash)) <= 3
-      ),
-      fp AS (SELECT image_id AS id, {_cap_fp} AS fp FROM p),
-      exact_drops AS (
-        SELECT f.id FROM fp f
-        JOIN (SELECT fp, min(id) AS m FROM fp GROUP BY fp) g
-          ON f.fp = g.fp AND f.id <> g.m
-      ),
-      sh AS (SELECT image_id AS id, {_cap_sh} AS sh FROM p),
-      near_drops AS (
-        SELECT DISTINCT b.id FROM sh a JOIN sh b ON a.id < b.id
-        WHERE bit_count(xor(a.sh, b.sh)) <= 3
-      )
-      SELECT image_id, w, h, fmt, caption, phash,
-             n_pixels, aspect, caption_tokens, caption_lang
-      FROM p
-      WHERE image_id NOT IN (SELECT image_id FROM img_drops)
-        AND image_id NOT IN (
-          SELECT id FROM exact_drops UNION SELECT id FROM near_drops)
-    """
-
-    # pair_corpus_clean_safe: the same closure with the zero-tolerance
-    # caption blocklist gate between the token filter and the dedup
-    # stages — blocklist_stats_sql replays the whole-token rule.
-    _cap_bl = blocklist_stats_sql("caption")
-    o["pair_corpus_clean_safe"] = f"""
-      WITH p0(image_id, w, h, fmt, caption0, phash) AS (VALUES {_pair_full}),
-      p1 AS (
-        SELECT image_id, w, h, fmt, phash,
-               CASE WHEN substr(image_id, 14, 1) = '9'
-                    THEN '{_BANNED_CAPTION}' ELSE caption0 END AS caption
-        FROM p0
-      ),
-      p AS (
-        SELECT image_id, w, h, fmt, caption, phash,
-               CAST(w * h AS BIGINT) AS n_pixels,
-               round(greatest(w, h) / least(w, h), 6) AS aspect,
-               CAST({_cap_tok} AS INTEGER) AS caption_tokens,
-               {_cap_bl['banned_frac']} AS banned_frac
-        FROM p1
-        WHERE w * h >= 1024
-          AND greatest(w, h) / least(w, h) <= 4.0
-          AND {_cap_tok} >= 4
-          AND ({_cap_bl['banned_frac']}) <= 0.0
-      ),
-      img_drops AS (
-        SELECT DISTINCT b.image_id FROM p a JOIN p b
-          ON a.image_id < b.image_id
-         AND bit_count(xor(a.phash, b.phash)) <= 3
-      ),
-      fp AS (SELECT image_id AS id, {_cap_fp} AS fp FROM p),
-      exact_drops AS (
-        SELECT f.id FROM fp f
-        JOIN (SELECT fp, min(id) AS m FROM fp GROUP BY fp) g
-          ON f.fp = g.fp AND f.id <> g.m
-      ),
-      sh AS (SELECT image_id AS id, {_cap_sh} AS sh FROM p),
-      near_drops AS (
-        SELECT DISTINCT b.id FROM sh a JOIN sh b ON a.id < b.id
-        WHERE bit_count(xor(a.sh, b.sh)) <= 3
-      )
-      SELECT image_id, w, h, fmt, caption, phash,
-             n_pixels, aspect, caption_tokens, banned_frac
-      FROM p
-      WHERE image_id NOT IN (SELECT image_id FROM img_drops)
-        AND image_id NOT IN (
-          SELECT id FROM exact_drops UNION SELECT id FROM near_drops)
-    """
-
-    # pair_corpus_clean_quality: the same closure with the decode-side
-    # quality gate between the metadata filters and the dedup stages —
-    # the gate's integers come from the sequentially re-derived kernel
-    # values (every drop and every carried stat is value-checked).
-    o["pair_corpus_clean_quality"] = f"""
-      WITH p0(image_id, w, h, fmt, caption0, phash) AS (VALUES {_pair_full}),
-      qv(image_id, sharp0, ent0) AS
+    o["pair_corpus_clean"] = pair_clean(_pair_src_sql("3", _BOILER_CAPTION))
+    o["pair_corpus_clean_lang"] = pair_clean(
+        _pair_src_sql("7", _GERMAN_CAPTION), allowed_langs=("en", "und")
+    )
+    o["pair_corpus_clean_safe"] = pair_clean(
+        _pair_src_sql("9", _BANNED_CAPTION), max_banned_frac=0.0
+    )
+    # the quality gate's integers come from the sequentially re-derived
+    # kernel values (every drop and every carried stat is value-checked)
+    o["pair_corpus_clean_quality"] = pair_clean(
+        f"""{_pair_src_sql("3", _BOILER_CAPTION)},
+      qv(image_id, sharp_milli, ent_milli) AS
         (VALUES {_image_quality_milli_values(512, 42)}),
-      p1 AS (
-        SELECT image_id, w, h, fmt, phash,
-               CASE WHEN substr(image_id, 14, 1) = '3'
-                    THEN '{_BOILER_CAPTION}' ELSE caption0 END AS caption
-        FROM p0
-      ),
-      p AS (
-        SELECT p1.image_id, w, h, fmt, caption, phash,
-               CAST(w * h AS BIGINT) AS n_pixels,
-               round(greatest(w, h) / least(w, h), 6) AS aspect,
-               CAST({_cap_tok} AS INTEGER) AS caption_tokens,
-               CAST(qv.sharp0 AS BIGINT) AS sharp_milli,
-               CAST(qv.ent0 AS BIGINT) AS ent_milli
-        FROM p1 JOIN qv ON p1.image_id = qv.image_id
-        WHERE w * h >= 1024
-          AND greatest(w, h) / least(w, h) <= 4.0
-          AND {_cap_tok} >= 4
-          AND qv.sharp0 >= 2000000 AND qv.ent0 >= 4000
-      ),
-      img_drops AS (
-        SELECT DISTINCT b.image_id FROM p a JOIN p b
-          ON a.image_id < b.image_id
-         AND bit_count(xor(a.phash, b.phash)) <= 3
-      ),
-      fp AS (SELECT image_id AS id, {_cap_fp} AS fp FROM p),
-      exact_drops AS (
-        SELECT f.id FROM fp f
-        JOIN (SELECT fp, min(id) AS m FROM fp GROUP BY fp) g
-          ON f.fp = g.fp AND f.id <> g.m
-      ),
-      sh AS (SELECT image_id AS id, {_cap_sh} AS sh FROM p),
-      near_drops AS (
-        SELECT DISTINCT b.id FROM sh a JOIN sh b ON a.id < b.id
-        WHERE bit_count(xor(a.sh, b.sh)) <= 3
-      )
-      SELECT image_id, w, h, fmt, caption, phash,
-             n_pixels, aspect, caption_tokens, sharp_milli, ent_milli
-      FROM p
-      WHERE image_id NOT IN (SELECT image_id FROM img_drops)
-        AND image_id NOT IN (
-          SELECT id FROM exact_drops UNION SELECT id FROM near_drops)
-    """
-
-    # pair_corpus_clean_aligned: the same closure with the CLIP-score
-    # alignment gate between the metadata filters and the dedup stages —
+      q AS (SELECT * FROM src JOIN qv USING (image_id))""",
+        "q", min_sharp_milli=2_000_000, min_ent_milli=4_000,
+    )
     # embeddings attach via the identical two vec_id equi-joins, and the
     # corpus size enters as a scalar subquery (the Spark side's one
-    # bounded driver count).
-    o["pair_corpus_clean_aligned"] = f"""
-      WITH p0(image_id, w, h, fmt, caption, phash) AS (VALUES {_pair_full}),
+    # bounded driver count)
+    o["pair_corpus_clean_aligned"] = pair_clean(
+        f"""{_pair_src_sql()},
       d AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
       n AS (SELECT count(*) AS n_emb FROM d),
       pa AS (
-        SELECT p0.*,
-               round(list_cosine_similarity(ei.emb, ec.emb), 6) AS alignment
-        FROM p0 CROSS JOIN n
+        SELECT src.*, ei.emb AS image_emb, ec.emb AS caption_emb
+        FROM src CROSS JOIN n
         JOIN d ei
           ON ei.vec_id = CAST(substr(image_id, 5) AS BIGINT) % n.n_emb
         JOIN d ec
@@ -3740,42 +3488,9 @@ GROUP BY 1, 2
                WHEN CAST(substr(image_id, 5) AS BIGINT) % 9 = 0
                THEN (CAST(substr(image_id, 5) AS BIGINT) + 1) % n.n_emb
                ELSE CAST(substr(image_id, 5) AS BIGINT) % n.n_emb END
-      ),
-      p AS (
-        SELECT image_id, w, h, fmt, caption, phash,
-               CAST(w * h AS BIGINT) AS n_pixels,
-               round(greatest(w, h) / least(w, h), 6) AS aspect,
-               CAST({_cap_tok} AS INTEGER) AS caption_tokens,
-               alignment
-        FROM pa
-        WHERE w * h >= 1024
-          AND greatest(w, h) / least(w, h) <= 4.0
-          AND {_cap_tok} >= 4
-          AND alignment >= 0.9
-      ),
-      img_drops AS (
-        SELECT DISTINCT b.image_id FROM p a JOIN p b
-          ON a.image_id < b.image_id
-         AND bit_count(xor(a.phash, b.phash)) <= 3
-      ),
-      fp AS (SELECT image_id AS id, {_cap_fp} AS fp FROM p),
-      exact_drops AS (
-        SELECT f.id FROM fp f
-        JOIN (SELECT fp, min(id) AS m FROM fp GROUP BY fp) g
-          ON f.fp = g.fp AND f.id <> g.m
-      ),
-      sh AS (SELECT image_id AS id, {_cap_sh} AS sh FROM p),
-      near_drops AS (
-        SELECT DISTINCT b.id FROM sh a JOIN sh b ON a.id < b.id
-        WHERE bit_count(xor(a.sh, b.sh)) <= 3
-      )
-      SELECT image_id, w, h, fmt, caption, phash,
-             n_pixels, aspect, caption_tokens, alignment
-      FROM p
-      WHERE image_id NOT IN (SELECT image_id FROM img_drops)
-        AND image_id NOT IN (
-          SELECT id FROM exact_drops UNION SELECT id FROM near_drops)
-    """
+      )""",
+        "pa", min_alignment=0.9,
+    )
 
     # same shared closure builder as dup_clusters_sql — the three cluster
     # oracles (text/image/embedding) cannot diverge in closure shape

@@ -384,9 +384,11 @@ class TestCurateCorpusLmGate:
         ref = spark.createDataFrame(
             [(100 + i, fluent) for i in range(3)], "doc_id long, text string"
         )
+        # doc 3 has one token, so no bigram to score: lm_score reads 0.0
+        # ("fluent"), but the gate must not take that as a pass
+        rows = [(1, fluent), (2, "zq wv xj qq pk rr zz kk ww vv uu tt"), (3, "zq")]
         docs = spark.createDataFrame(
-            [(1, fluent), (2, "zq wv xj qq pk rr zz kk ww vv uu tt")],
-            "doc_id long, text string",
+            rows, "doc_id long, text string"
         ).withColumn("lang", F.lit("en"))
         # permissive rule thresholds: only the LM gate can drop here
         base = cu.curate_corpus(
@@ -402,10 +404,24 @@ class TestCurateCorpusLmGate:
             lm_ref=ref, lm_score_max=cut,
         )
         got = {r["doc_id"]: r["lm_score"] for r in gated.collect()}
-        assert {r["doc_id"] for r in base.collect()} == {1, 2}
-        assert set(got) == {1}  # gibberish dropped by the LM gate alone
+        assert {r["doc_id"] for r in base.collect()} == {1, 2, 3}
+        assert scores[3] == 0.0
+        # gibberish and the unscorable doc dropped by the LM gate alone
+        assert set(got) == {1}
         assert got[1] == scores[1]  # the score rides on the survivor
         assert "lm_score" not in base.columns  # gate off -> schema unchanged
+        # the SQL twin gates the same way (an empty eval set decontaminates
+        # nothing, as eval_docs=None does)
+        con = duckdb.connect()
+        con.execute("CREATE TABLE d (doc_id BIGINT, text VARCHAR, lang VARCHAR)")
+        con.executemany("INSERT INTO d VALUES (?, ?, 'en')", rows)
+        sql = cu.curate_corpus_sql(
+            "d", "(SELECT CAST(NULL AS VARCHAR) AS text WHERE false)",
+            quality_min=0.0, dup_frac_max=1.0,
+            lm_ref=f"SELECT 100 + i AS doc_id, '{fluent}' AS text FROM range(3) t(i)",
+            lm_score_max=cut,
+        )
+        assert {r[0] for r in con.execute(sql).fetchall()} == {1}
 
 
 class TestBlocklistFilter:

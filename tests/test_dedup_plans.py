@@ -11,16 +11,15 @@ Locks in the scale-critical shapes added in round 3:
   band-bucket equi-joins, never cartesian.
 """
 
-import sys
+import os
 
+from conftest import TESTDATA
 from pyspark.sql import functions as F
-
-sys.path.insert(0, "/root/repo")
 
 from web_scraper_spark.functions import dedupops, simsearch
 from web_scraper_spark.plans import audit
 
-SF = "/root/testdata/sf0.01"
+SF = os.path.join(TESTDATA, "sf0.01")
 
 
 def _docs(spark):

@@ -7,18 +7,15 @@ shape as CORRECTNESS_r{N}.json. No-oracle entries are smoke-run for
 schema stability + rows >= 0.
 """
 
-import math
 import os
-import sys
 
 import duckdb
 import pytest
-
-sys.path.insert(0, "/root/repo")
+from conftest import TESTDATA
 
 import __spark_entry__ as entrymod
 
-SF_DIR = "/root/testdata/sf0.01"
+SF_DIR = os.path.join(TESTDATA, "sf0.01")
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings",

@@ -363,3 +363,109 @@ def test_pair_corpus_clean_safety_gate(spark):
     assert set(got) == plain_ids - banned_ids
     assert banned_ids & plain_ids  # the drop path provably fired
     assert all(v == 0.0 for v in got.values())
+
+
+class TestPairCorpusCleanSql:
+    """pairs.pair_corpus_clean_sql — the DuckDB twin the pair oracles
+    call — on a hand-made table with one pair per drop reason. No Spark."""
+
+    KEEP_CAP = "a detailed photo of subject number zero in context"
+    ALIGNED = ([1.0, 0.0], [1.0, 0.0])
+
+    @staticmethod
+    def _phash(k):
+        # spread 64-bit values, pairwise hamming far above 3
+        return ((k + 1) * 0x9E3779B97F4A7C15 & (2**64 - 1)) - (2**63)
+
+    def _rows(self):
+        p = self._phash
+        ok = dict(w=64, h=64, sharp=3_000_000, ent=5_000, emb=self.ALIGNED)
+        spec = [
+            ("p-00", ok, self.KEEP_CAP, p(0)),  # kept
+            ("p-01", {**ok, "w": 16, "h": 16}, "a small photo of a tiny thing", p(1)),
+            ("p-02", {**ok, "w": 400, "h": 50}, "a long panorama of the whole city", p(2)),
+            ("p-03", ok, "a red car", p(3)),  # 3 caption tokens
+            ("p-04", ok, "photo of spamterm content right here", p(4)),
+            ("p-05", ok, "der hund ist nicht gross und die katze ist klein", p(5)),
+            ("p-06", {**ok, "emb": ([1.0, 0.0], [0.0, 1.0])}, "an image of a bright blue kite", p(6)),
+            ("p-07", {**ok, "sharp": 1_000_000}, "a blurry shot of a moving train", p(7)),
+            ("p-08", ok, "green hills under a cloudy evening sky", p(0) ^ 0b101),
+            ("p-09", ok, "A Detailed Photo of subject number zero in context", p(9)),
+            ("p-10", {**ok, "sharp": None, "ent": None}, "a broken file that will not open", p(10)),
+            ("p-11", ok, "two children playing football on the beach", p(11)),  # kept
+        ]
+        return [
+            (i, g["w"], g["h"], "png", cap, ph, g["sharp"], g["ent"], *g["emb"])
+            for i, g, cap, ph in spec
+        ]
+
+    def _con(self):
+        import duckdb
+
+        con = duckdb.connect()
+        con.execute(
+            "CREATE TABLE pairs (image_id VARCHAR, w INTEGER, h INTEGER, fmt VARCHAR, "
+            "caption VARCHAR, phash BIGINT, sharp_milli BIGINT, ent_milli BIGINT, "
+            "image_emb DOUBLE[], caption_emb DOUBLE[])"
+        )
+        con.executemany(
+            "INSERT INTO pairs VALUES (?, ?, ?, ?, ?, ?, ?, ?, ?, ?)", self._rows()
+        )
+        return con
+
+    def test_every_drop_reason_with_all_gates_on(self):
+        con = self._con()
+        rel = con.sql(
+            pairs_ops.pair_corpus_clean_sql(
+                "pairs", min_sharp_milli=2_000_000, min_ent_milli=4_000,
+                min_alignment=0.9, allowed_langs=("en", "und"),
+                max_banned_frac=0.0,
+            )
+        )
+        cols = rel.columns
+        got = {r[0]: dict(zip(cols, r)) for r in rel.fetchall()}
+        # p-01 tiny, p-02 wide, p-03 short caption, p-04 banned term,
+        # p-05 German, p-06 misaligned, p-07 blurry, p-08 phash near-dup
+        # of p-00, p-09 caption near-dup of p-00, p-10 undecodable
+        assert set(got) == {"p-00", "p-11"}
+        assert cols == [
+            "image_id", "w", "h", "fmt", "caption", "phash",
+            "n_pixels", "aspect", "caption_tokens",
+            "banned_frac", "caption_lang", "alignment",
+            "sharp_milli", "ent_milli",
+        ]
+        assert got["p-00"] | {"caption_lang": None} == {
+            "image_id": "p-00", "w": 64, "h": 64, "fmt": "png",
+            "caption": self.KEEP_CAP, "phash": self._phash(0),
+            "n_pixels": 4096, "aspect": 1.0, "caption_tokens": 9,
+            "banned_frac": 0.0, "caption_lang": None, "alignment": 1.0,
+            "sharp_milli": 3_000_000, "ent_milli": 5_000,
+        }
+        assert got["p-00"]["caption_lang"] in ("en", "und")
+
+    def test_gates_off_keeps_the_metadata_survivors(self):
+        con = self._con()
+        rel = con.sql(pairs_ops.pair_corpus_clean_sql("pairs"))
+        got = {r[0] for r in rel.fetchall()}
+        # only geometry, caption tokens and the keep-set apply
+        assert got == {"p-00", "p-04", "p-05", "p-06", "p-07", "p-10", "p-11"}
+        assert rel.columns == [
+            "image_id", "w", "h", "fmt", "caption", "phash",
+            "n_pixels", "aspect", "caption_tokens",
+        ]
+
+    @pytest.mark.parametrize(
+        "gate,dropped",
+        [
+            (dict(max_banned_frac=0.0), {"p-04"}),
+            (dict(allowed_langs=("en", "und")), {"p-05"}),
+            (dict(min_alignment=0.9), {"p-06"}),
+            (dict(min_sharp_milli=2_000_000, min_ent_milli=4_000), {"p-07", "p-10"}),
+        ],
+        ids=["safety", "language", "alignment", "quality"],
+    )
+    def test_each_gate_drops_only_its_pairs(self, gate, dropped):
+        con = self._con()
+        rel = con.sql(pairs_ops.pair_corpus_clean_sql("pairs", **gate))
+        metadata_survivors = {"p-00", "p-04", "p-05", "p-06", "p-07", "p-10", "p-11"}
+        assert {r[0] for r in rel.fetchall()} == metadata_survivors - dropped

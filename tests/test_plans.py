@@ -7,17 +7,15 @@ codegen for the native expression pipeline.
 """
 
 import os
-import sys
 
 import pytest
+from conftest import TESTDATA
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
 import __spark_entry__ as entrymod
-
 from web_scraper_spark.plans import audit
 
-SF = "/root/testdata/sf0.01"
+SF = os.path.join(TESTDATA, "sf0.01")
 
 
 def test_filter_pushdown_reaches_parquet(spark):

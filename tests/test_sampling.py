@@ -428,6 +428,38 @@ class TestTemperatureBudgets:
             by.setdefault(r["lang"], []).append(r["doc_id"])
         assert len(by["a"]) == 4 and len(by["b"]) == 2
 
+    def test_budget_product_does_not_overflow_int64(self, spark):
+        """10^16- and 4*10^16-token strata have w_fp 10^14 and 2*10^14, so
+        total_budget * w_fp is 10^20 and 2*10^20, past 2^63: the budget
+        must still be exactly total * w div sum(w), in Spark and DuckDB.
+        Each stratum's docs put the budget edge between two prefixes, so
+        the kept set pins the DuckDB twin's budget to the token."""
+        from web_scraper_spark.operators import sampling
+
+        total = 10**6
+        rows = [
+            (1, "a", 3.0, 333_333), (2, "a", 2.0, 1), (3, "a", 1.0, 10**16 - 333_334),
+            (4, "b", 3.0, 666_666), (5, "b", 2.0, 1), (6, "b", 1.0, 4 * 10**16 - 666_667),
+        ]
+        df = spark.createDataFrame(
+            rows, "doc_id long, lang string, priority double, tokens long"
+        )
+        budgets = sampling.temperature_budgets(df, total)
+        got = {r["lang"]: (r["w_fp"], r["_budget"]) for r in budgets.collect()}
+        w = {"a": 10**14, "b": 2 * 10**14}
+        assert got == {l: (w[l], total * w[l] // sum(w.values())) for l in w}
+        assert {l: b for l, (_, b) in got.items()} == {"a": 333_333, "b": 666_666}
+        kept = sampling.token_budget_sample(df, budgets).collect()
+        assert {r["doc_id"] for r in kept} == {1, 4}
+
+        con = duckdb.connect()
+        con.execute(
+            "CREATE TABLE docs (doc_id BIGINT, lang VARCHAR, priority DOUBLE, tokens BIGINT)"
+        )
+        con.executemany("INSERT INTO docs VALUES (?, ?, ?, ?)", rows)
+        sql = sampling.temperature_budget_sample_sql("docs", total)
+        assert {r[0] for r in con.execute(sql).fetchall()} == {1, 4}
+
     def test_no_python_no_driver_data(self, spark):
         from web_scraper_spark.operators import sampling
 

@@ -481,6 +481,34 @@ def lm_bigram_score_sql(
 # --------------------------------------------------------------------------
 
 
+def rule_filter(
+    df: DataFrame, text_col: str, quality_min: float, dup_frac_max: float
+) -> DataFrame:
+    """The document rule filter: adds ``quality`` (quality_score) and
+    ``n_tokens`` (whitespace token count) to every row of ``df`` and
+    keeps the rows with quality >= quality_min and duplicate-token
+    fraction <= dup_frac_max. The batch composite (curate_corpus) and the
+    stream (streaming.curation_stream) both filter through it; the SQL
+    twin is the ``scored``/``rule_filtered`` stage of curate_corpus_sql.
+    Pure JVM codegen, pushed onto the scan."""
+    from web_scraper_spark.functions import textanalysis as ta
+
+    text = F.col(text_col)
+    return (
+        df.select(
+            "*",
+            ta.quality_score_expr(text).alias("quality"),
+            ta.token_count_expr(text).cast("long").alias("n_tokens"),
+            ta.dup_token_fraction_expr(text).alias("_dup_frac"),
+        )
+        .filter(
+            (F.col("quality") >= quality_min)
+            & (F.col("_dup_frac") <= dup_frac_max)
+        )
+        .drop("_dup_frac")
+    )
+
+
 def curate_corpus(
     train: DataFrame,
     eval_docs: DataFrame | None = None,
@@ -528,30 +556,30 @@ def curate_corpus(
     it with dedupops.unpersist_op_caches() between corpora.
     """
     from web_scraper_spark.functions import dedupops
-    from web_scraper_spark.functions import textanalysis as ta
     from web_scraper_spark.operators.sampling import token_budget_sample
 
-    scored = train.select(
-        F.col(id_col),
-        F.col(stratum_col),
-        F.col(text_col),
-        ta.quality_score_expr(F.col(text_col)).alias("quality"),
-        ta.token_count_expr(F.col(text_col)).cast("long").alias("n_tokens"),
-        ta.dup_token_fraction_expr(F.col(text_col)).alias("_dup_frac"),
-    ).filter(
-        (F.col("quality") >= quality_min) & (F.col("_dup_frac") <= dup_frac_max)
+    scored = rule_filter(
+        train.select(id_col, stratum_col, text_col),
+        text_col, quality_min, dup_frac_max,
     )
     lm_cols: list[str] = []
     if lm_ref is not None and lm_score_max is not None:
         # the LM gate runs on the rule-filter survivors (fewer docs to
         # score) and BEFORE the heavier decontamination/dedup joins;
-        # scored feeds both the scoring explode and the gate join
+        # scored feeds both the scoring explode and the gate join. A doc
+        # with no scored bigram (<2 tokens) has no perplexity to pass
+        # the gate with, so it drops.
         scored = dedupops.register_op_cache(scored)
         lm = lm_bigram_score(
             scored, lm_ref, id_col=id_col, text_col=text_col
-        ).select(id_col, "lm_score")
-        scored = scored.join(lm, id_col).filter(
-            F.col("lm_score") <= float(lm_score_max)
+        ).select(id_col, "lm_score", "n_scored")
+        scored = (
+            scored.join(lm, id_col)
+            .filter(
+                (F.col("lm_score") <= float(lm_score_max))
+                & (F.col("n_scored") > 0)
+            )
+            .drop("n_scored")
         )
         lm_cols = ["lm_score"]
     if eval_docs is not None:
@@ -647,7 +675,7 @@ lm AS ({lm_inner}),
 filtered AS (
   SELECT f.*, lm.lm_score FROM rule_filtered f
   JOIN lm USING ({id_col})
-  WHERE lm.lm_score <= {float(lm_score_max)}
+  WHERE lm.lm_score <= {float(lm_score_max)} AND lm.n_scored > 0
 ),"""
         lm_out = " d.lm_score,"
     else:

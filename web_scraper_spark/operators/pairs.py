@@ -157,50 +157,45 @@ def pair_keep_ids(
     )
 
 
-def pair_corpus_clean(
+def gate_pairs(
     images: DataFrame,
+    *,
     min_pixels: int = 1024,
     max_aspect: float = 4.0,
     min_caption_tokens: int = 4,
-    max_phash_hamming: int = 3,
-    caption_hamming: int = 3,
-    n_bands: int = 4,
+    max_banned_frac: float | None = None,
+    allowed_langs: tuple[str, ...] | None = None,
+    min_alignment: float | None = None,
     min_sharp_milli: int | None = None,
     min_ent_milli: int | None = None,
-    min_alignment: float | None = None,
-    allowed_langs: tuple[str, ...] | None = None,
-    max_banned_frac: float | None = None,
 ) -> DataFrame:
-    """The full multimodal training-pair pipeline as ONE composite — the
-    image twin of the text side's corpus_clean: (1) image geometry filter
-    (min decoded pixel count, max aspect ratio — the cheap metadata cut a
-    pipeline runs before any pixel work), (2) caption token-count filter,
-    (2a) optionally the caption-language gate (pass ``allowed_langs`` —
-    marker-argmax lang id as pure codegen, LAION-style per-language cut;
-    ``caption_lang`` rides on survivors) and/or the caption SAFETY gate
-    (pass ``max_banned_frac`` — curation.blocklist_filter's whole-token
-    rule; ``banned_frac`` rides on survivors), (2b) optionally the
-    CLIP-score alignment gate (pass min_alignment and
-    an input carrying ``image_emb``/``caption_emb`` array columns from an
-    upstream inference stage — simsearch.pair_alignment's rule, applied
-    BEFORE the Arrow decode gate because the JVM cosine is cheaper than a
-    pixel decode; ``alignment`` rides on the survivors, the embeddings do
-    not), (3) optionally the DECODE-side quality gate
-    (imageops.quality_stats via quality_struct_udf — pass
-    min_sharp_milli/min_ent_milli and an input with a ``bytes`` column):
-    blurry / near-constant / undecodable images drop, with
-    sharp_milli/ent_milli carried on the survivors,
-    (4) the joint image+caption keep-set (pair_keep_ids). Returns each
-    surviving pair with its scores (n_pixels, aspect, caption_tokens).
+    """The row-local pair gates, in order: (1) image geometry (min
+    decoded pixel count, max aspect ratio — the cheap metadata cut a
+    pipeline runs before any pixel work) and caption token count;
+    optionally (2) the caption SAFETY gate (pass ``max_banned_frac`` —
+    curation.blocklist_filter's whole-token rule; ``banned_frac`` rides
+    on survivors), (3) the caption-language gate (pass ``allowed_langs``
+    — marker-argmax lang id, the LAION-style per-language cut;
+    ``caption_lang`` rides on survivors), (4) the CLIP-score alignment
+    gate (pass ``min_alignment`` and an input carrying
+    ``image_emb``/``caption_emb`` array columns from an upstream
+    inference stage — simsearch.pair_alignment's round-then-compare
+    rule; ``alignment`` rides on survivors, the embeddings do not) and
+    (5) the DECODE-side quality gate (pass ``min_sharp_milli`` and/or
+    ``min_ent_milli`` and an input with a ``bytes`` column —
+    imageops.quality_stats via quality_struct_udf: blurry /
+    near-constant / undecodable images drop, ``sharp_milli``/
+    ``ent_milli`` ride on survivors, the bytes do not).
 
-    Every stage is an exact kernel with a SQL twin, so the composite is
-    value-oracled end to end. Scale shape: the filters are JVM
-    whole-stage-codegen expressions pushed onto the scan; the quality gate
-    is a SCALAR Arrow UDF inline in the same row stream — pixels are
-    decoded ONLY for metadata-filter survivors, and the stage adds no
-    exchange; the scored survivor frame is persisted once (registered) and
-    feeds both keep-set derivations and the final join."""
-    from ..functions.dedupops import register_op_cache
+    Every input column also rides on survivors, with (n_pixels, aspect,
+    caption_tokens) added. The batch composite (pair_corpus_clean) and
+    the pair stream (streaming.pair_stream) both gate through this one
+    function, so a pair passes streaming iff it passes batch.
+
+    Scale shape: gates 1-4 are JVM whole-stage-codegen expressions pushed
+    onto the scan, cheapest first; gate 5 is a SCALAR Arrow UDF inline in
+    the same row stream, so pixels are decoded ONLY for the survivors of
+    the metadata gates. No stage adds an exchange or state."""
     from ..functions.textanalysis import token_count_expr
 
     scored = (
@@ -221,9 +216,6 @@ def pair_corpus_clean(
     if max_banned_frac is not None:
         from ..functions.curation import blocklist_stats_expr
 
-        # caption safety gate (the blocklist stage, pair form): same
-        # whole-token rule as curation.blocklist_filter, pure codegen
-        # before any embedding/pixel work; banned_frac rides on survivors
         scored = (
             scored.withColumn(
                 "_bs", blocklist_stats_expr(F.col("caption"))
@@ -235,20 +227,12 @@ def pair_corpus_clean(
     if allowed_langs is not None:
         from ..functions.textanalysis import lang_id_expr
 
-        # caption-language gate (the LAION-style per-language corpus cut):
-        # marker-argmax lang id is pure codegen on the already-filtered
-        # rows, so like the other metadata gates it adds zero exchange and
-        # runs before any embedding/pixel work; caption_lang rides on the
-        # survivors for downstream per-language stats
         scored = scored.withColumn(
             "caption_lang", lang_id_expr(F.col("caption"))
         ).filter(F.col("caption_lang").isin(*[F.lit(l) for l in allowed_langs]))
     if min_alignment is not None:
         from ..functions.simsearch import cosine_expr
 
-        # same round-then-compare boundary rule as simsearch.pair_alignment;
-        # row-local codegen, so it adds zero exchange and runs before the
-        # (more expensive) Arrow decode stage
         a = F.round(
             cosine_expr(F.col("image_emb"), F.col("caption_emb")), 6
         )
@@ -273,13 +257,155 @@ def pair_corpus_clean(
             .withColumn("ent_milli", F.col("_q.ent_milli"))
             .drop("_q", "bytes")
         )
-    scored = register_op_cache(scored)
+    return scored
+
+
+def pair_corpus_clean(
+    images: DataFrame,
+    min_pixels: int = 1024,
+    max_aspect: float = 4.0,
+    min_caption_tokens: int = 4,
+    max_phash_hamming: int = 3,
+    caption_hamming: int = 3,
+    n_bands: int = 4,
+    min_sharp_milli: int | None = None,
+    min_ent_milli: int | None = None,
+    min_alignment: float | None = None,
+    allowed_langs: tuple[str, ...] | None = None,
+    max_banned_frac: float | None = None,
+) -> DataFrame:
+    """The full multimodal training-pair pipeline as ONE composite — the
+    image twin of the text side's corpus_clean: the pair gates
+    (gate_pairs: geometry + caption tokens, then the optional safety,
+    language, alignment and decode-quality gates, each switched on by its
+    parameter), then the joint image+caption keep-set (pair_keep_ids).
+    Returns each surviving pair with its scores (n_pixels, aspect,
+    caption_tokens, plus the stat of every gate switched on).
+
+    Every stage is an exact kernel with a SQL twin (pair_corpus_clean_sql),
+    so the composite is value-oracled end to end. Scale shape: the gates
+    add no exchange; the gated survivor frame is persisted once
+    (registered) and feeds both keep-set derivations and the final join."""
+    from ..functions.dedupops import register_op_cache
+
+    scored = register_op_cache(
+        gate_pairs(
+            images,
+            min_pixels=min_pixels,
+            max_aspect=max_aspect,
+            min_caption_tokens=min_caption_tokens,
+            max_banned_frac=max_banned_frac,
+            allowed_langs=allowed_langs,
+            min_alignment=min_alignment,
+            min_sharp_milli=min_sharp_milli,
+            min_ent_milli=min_ent_milli,
+        )
+    )
     return pair_keep_ids(
         scored,
         max_phash_hamming=max_phash_hamming,
         caption_hamming=caption_hamming,
         n_bands=n_bands,
     )
+
+
+def neardup_image_ids_sql(table: str, max_hamming: int = 3) -> str:
+    """DuckDB twin of neardup_image_ids, stated naively (all pairs):
+    the image_ids of ``table`` (image_id, phash, ...) within phash
+    hamming ``max_hamming`` of a smaller id."""
+    return f"""
+SELECT DISTINCT b.image_id FROM {table} a JOIN {table} b
+  ON a.image_id < b.image_id
+ AND bit_count(xor(a.phash, b.phash)) <= {max_hamming}
+"""
+
+
+def pair_keep_ids_sql(
+    table: str, max_phash_hamming: int = 3, caption_hamming: int = 3
+) -> str:
+    """DuckDB twin of pair_keep_ids: every row of ``table`` (image_id,
+    phash, caption, ...) whose image is not a phash near-dup of a smaller
+    id and whose caption survives dedupops.dedup_keep_ids_sql. Internal
+    CTE names carry a ``pk_`` prefix, and callers must not name an outer
+    CTE ``fp``/``sh``/``exact_drops``/``near_drops`` (dedup_keep_ids_sql's
+    inner names): DuckDB's binder misresolves a shadowed CTE name."""
+    from ..functions.dedupops import dedup_keep_ids_sql
+
+    cap_keep = dedup_keep_ids_sql(
+        max_hamming=caption_hamming, table=table,
+        id_col="image_id", text_col="caption",
+    )
+    return f"""
+WITH pk_img_drops AS ({neardup_image_ids_sql(table, max_phash_hamming)}),
+pk_cap_keep AS ({cap_keep})
+SELECT * FROM {table}
+WHERE image_id NOT IN (SELECT image_id FROM pk_img_drops)
+  AND image_id IN (SELECT image_id FROM pk_cap_keep)
+"""
+
+
+def pair_corpus_clean_sql(
+    table: str,
+    min_pixels: int = 1024,
+    max_aspect: float = 4.0,
+    min_caption_tokens: int = 4,
+    max_phash_hamming: int = 3,
+    caption_hamming: int = 3,
+    min_sharp_milli: int | None = None,
+    min_ent_milli: int | None = None,
+    min_alignment: float | None = None,
+    allowed_langs: tuple[str, ...] | None = None,
+    max_banned_frac: float | None = None,
+) -> str:
+    """DuckDB twin of pair_corpus_clean, written from the gate rules (not
+    generated from the Spark code). ``table`` carries the raw pair
+    columns (image_id, w, h, fmt, caption, phash); plus sharp_milli /
+    ent_milli when the quality gate is on (DuckDB cannot decode pixels:
+    the caller supplies the kernel's integers, NULL for an undecodable
+    image); plus image_emb / caption_emb when the alignment gate is on.
+    Returns the raw pair columns, (n_pixels, aspect, caption_tokens) and
+    the stat of every gate switched on."""
+    from ..functions.curation import blocklist_stats_sql
+    from ..functions.textanalysis import lang_id_sql, token_count_sql
+
+    cols = [
+        "image_id", "w", "h", "fmt", "caption", "phash",
+        "CAST(w * h AS BIGINT) AS n_pixels",
+        "round(greatest(w, h) / least(w, h), 6) AS aspect",
+        f"CAST({token_count_sql('caption')} AS INTEGER) AS caption_tokens",
+    ]
+    where = [
+        f"n_pixels >= {int(min_pixels)}",
+        f"aspect <= {float(max_aspect)}",
+        f"caption_tokens >= {int(min_caption_tokens)}",
+    ]
+    if max_banned_frac is not None:
+        cols.append(f"{blocklist_stats_sql('caption')['banned_frac']} AS banned_frac")
+        where.append(f"banned_frac <= {float(max_banned_frac)}")
+    if allowed_langs is not None:
+        cols.append(f"{lang_id_sql('caption')} AS caption_lang")
+        langs = ", ".join(f"'{l}'" for l in allowed_langs)
+        where.append(f"caption_lang IN ({langs})")
+    if min_alignment is not None:
+        cols.append(
+            "round(list_cosine_similarity(image_emb, caption_emb), 6) AS alignment"
+        )
+        where.append(f"alignment >= {float(min_alignment)}")
+    if min_sharp_milli is not None or min_ent_milli is not None:
+        cols += [
+            "CAST(sharp_milli AS BIGINT) AS sharp_milli",
+            "CAST(ent_milli AS BIGINT) AS ent_milli",
+        ]
+        where.append(
+            f"sharp_milli >= {int(min_sharp_milli or 0)}"
+            f" AND ent_milli >= {int(min_ent_milli or 0)}"
+        )
+    keep = pair_keep_ids_sql("pc_gated", max_phash_hamming, caption_hamming)
+    return f"""
+WITH pc_scored AS (SELECT {", ".join(cols)} FROM {table}),
+pc_gated AS (SELECT * FROM pc_scored WHERE {" AND ".join(where)})
+SELECT * FROM ({keep})
+"""
 
 
 def image_dup_clusters(

@@ -407,7 +407,9 @@ def temperature_budgets(
     Returns (stratum_col, stratum_tokens, w_fp, _budget):
     w_fp = round(sqrt(stratum token total) * 1e6) as int64, and
     _budget = total_budget * w_fp div sum(w_fp) — all-integer division,
-    so budgets are hash-exact and sum to <= total_budget. Feed the frame
+    so budgets are hash-exact and sum to <= total_budget. The product is
+    taken in decimal(38,0): total_budget * w_fp passes 2^63 at realistic
+    scale (10^16-token strata have w_fp 10^14). Feed the frame
     straight into token_budget_sample (the computed-budget form).
 
     100 TB shape: ONE partial-aggregable groupBy(stratum) over the
@@ -434,7 +436,7 @@ def temperature_budgets(
         stratum_col,
         "stratum_tokens",
         "w_fp",
-        F.expr(f"{int(total_budget)} * w_fp div _w_tot")
+        F.expr(f"CAST({int(total_budget)} AS DECIMAL(38,0)) * w_fp div _w_tot")
         .cast("long")
         .alias("_budget"),
     )
@@ -450,7 +452,9 @@ def temperature_budget_sample_sql(
 ) -> str:
     """DuckDB oracle for token_budget_sample(docs,
     temperature_budgets(docs, total_budget)): the one-window statement
-    with the budget table COMPUTED by the same sqrt fixed-point rule."""
+    with the budget table COMPUTED by the same sqrt fixed-point rule. The
+    budget product is taken in DECIMAL(38,0) and divided as HUGEINT:
+    DuckDB's ``//`` on a DECIMAL divides in DOUBLE."""
     return f"""
       WITH src AS (SELECT * FROM {table} WHERE {tokens_col} > 0),
       per AS (
@@ -461,8 +465,9 @@ def temperature_budget_sample_sql(
       ),
       b AS (
         SELECT {stratum_col},
-               CAST({int(total_budget)} * w_fp //
-                    (SELECT sum(w_fp) FROM per) AS BIGINT) AS budget
+               CAST(CAST(CAST({int(total_budget)} AS DECIMAL(38,0)) * w_fp
+                         AS HUGEINT) // (SELECT sum(w_fp) FROM per)
+                    AS BIGINT) AS budget
         FROM per
       ),
       ordered AS (

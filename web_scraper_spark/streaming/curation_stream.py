@@ -2,12 +2,12 @@
 
 The streaming twin of the batch ``curation.curate_corpus`` composite —
 documents arrive as a file stream and flow through the SAME per-row
-kernels the batch pipeline oracles, then into the exact-dedup state of
+kernels as the batch pipeline, then into the exact-dedup state of
 ``dedup_stream``:
 
-1. score + filter — quality_score / dup_token_fraction as pure JVM
-   codegen exprs on the stream (identical constants to the batch op, so
-   a doc passes streaming iff it passes batch);
+1. score + filter — ``curation.rule_filter``, the one definition of the
+   quality / repetition rule the batch op also calls (pure JVM codegen on
+   the stream; a doc passes streaming iff it passes batch);
 2. decontaminate — the eval set is STATIC and tiny by contract (the
    batch op broadcasts it; here its distinct 8-token-gram md5-60 hash set
    is collected ONCE at query build and embedded as an array literal),
@@ -43,13 +43,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.curation import pii_mask_expr, token_ngrams_expr
-from ..functions.textanalysis import (
-    dup_token_fraction_expr,
-    md5_60_expr,
-    quality_score_expr,
-    token_count_expr,
-)
+from ..functions.curation import pii_mask_expr, rule_filter, token_ngrams_expr
+from ..functions.textanalysis import md5_60_expr
 from .dedup_stream import DOCS_STREAM_SCHEMA
 
 
@@ -101,15 +96,9 @@ def curate_documents_stream(
     — one per KEPT document.
     """
     src = spark.readStream.schema(DOCS_STREAM_SCHEMA).parquet(docs_dir)
-    scored = src.select(
-        "doc_id",
-        "text",
-        "event_time",
-        quality_score_expr(F.col("text")).alias("quality"),
-        token_count_expr(F.col("text")).cast("long").alias("n_tokens"),
-        dup_token_fraction_expr(F.col("text")).alias("_dup_frac"),
-    ).filter(
-        (F.col("quality") >= quality_min) & (F.col("_dup_frac") <= dup_frac_max)
+    scored = rule_filter(
+        src.select("doc_id", "text", "event_time"),
+        "text", quality_min, dup_frac_max,
     )
     if eval_docs is not None:
         ev = eval_gram_hashes(eval_docs, ngram_n)

@@ -1,16 +1,18 @@
 """Streaming image+caption pair curation: the image twin of
 ``curation_stream.curate_documents_stream`` — the north-rule data shape
 (image_id, bytes, w, h, fmt, caption, phash) arriving as a continuous
-file stream and flowing through the SAME kernels the batch
+file stream and flowing through the SAME gates as the batch
 ``pairs.pair_corpus_clean(min_sharp_milli=..., min_ent_milli=...)``
-composite oracles:
+composite:
 
-1. geometry + caption-token filters — pure JVM codegen exprs with the
-   batch constants (a pair passes streaming iff it passes batch);
-2. decode-side quality gate — ``imageops.quality_struct_udf`` inline
-   (stateless Arrow UDF: pixels are decoded ONLY for metadata-filter
-   survivors, never buffered in state);
-3. exact dedup — two chained dropDuplicates state stores: per ``phash``
+1. ``pairs.gate_pairs`` — the one definition of the pair gates, called
+   here with the stream's thresholds: geometry + caption-token filters,
+   the optional safety / language / alignment gates, then the
+   decode-side quality gate (``imageops.quality_struct_udf`` inline:
+   stateless Arrow UDF, pixels decoded ONLY for metadata-gate survivors,
+   never buffered in state). A pair passes streaming iff it passes
+   batch;
+2. exact dedup — two chained dropDuplicates state stores: per ``phash``
    (byte-identical / re-encoded-identical image re-posts) then per
    caption fingerprint (boilerplate caption re-use). Keep-FIRST holds
    ACROSS micro-batches (state always beats later arrivals); within one
@@ -24,11 +26,12 @@ pairwise-within-corpus banded self-join with no bounded-state streaming
 equivalent — run the batch keep-set periodically over the sink (the
 incremental contract: pairs.neardup_image_ids over everything kept).
 
-Scale shape: stages 1-2 are per-row (no exchange); the two dedup states
+Scale shape: the gates are per-row (no exchange); the two dedup states
 hash-partition on phash / caption fp — the same keys the batch op
 shuffles on — and each holds one 8-byte key per distinct image/caption
-ever kept (ttl bounds it for unbounded runs). Bytes are dropped BEFORE
-the stateful exchange, so state and shuffle carry no pixel payloads.
+ever kept (ttl bounds it for unbounded runs). Only the sink columns and
+the caption fingerprint reach the stateful exchange: no pixel payload,
+embedding or per-gate stat rides in state or shuffle.
 """
 
 from __future__ import annotations
@@ -36,8 +39,8 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.imageops import quality_struct_udf
-from ..functions.textanalysis import md5_60_expr, token_count_expr
+from ..functions.textanalysis import md5_60_expr
+from ..operators.pairs import gate_pairs
 
 # ingest schema: the input_hint pair table + event_time for ttl'd runs
 PAIRS_STREAM_SCHEMA = (
@@ -59,6 +62,7 @@ CURATED_PAIRS_SCHEMA = (
     "phash long, n_pixels long, aspect double, caption_tokens int, "
     "sharp_milli long, ent_milli long, event_time double"
 )
+_SINK_COLS = [c.split()[0] for c in CURATED_PAIRS_SCHEMA.split(", ")]
 
 
 def curate_pairs_stream(
@@ -84,77 +88,30 @@ def curate_pairs_stream(
     Returns the StreamingQuery. Sink rows: CURATED_PAIRS_SCHEMA, one per
     KEPT pair.
 
-    With ``min_alignment`` set, the source must carry the
-    PAIRS_EMB_STREAM_SCHEMA embedding columns and the CLIP-score gate
-    (batch rule: round-6 cosine >= threshold, simsearch.pair_alignment)
-    runs STATELESS between the metadata filters and the decode gate —
-    codegen only, so it adds no state store and no exchange, and the
-    embedding arrays are dropped at the gate so neither the dedup state
-    nor the shuffle ever carries a vector payload.
-
-    With ``allowed_langs`` and/or ``max_banned_frac`` set, the batch
-    composite's caption-language gate (pairs.pair_corpus_clean 2a:
-    marker-argmax lang id) and caption SAFETY gate (the blocklist
-    whole-token rule) also run STATELESS after the metadata filters —
-    same codegen rules, same drop decisions as the batch path, no state
-    store, no exchange."""
+    Every gate is ``pairs.gate_pairs``, so each threshold means what it
+    means in batch. The quality gate is always on here. With
+    ``min_alignment`` set, the source must carry the
+    PAIRS_EMB_STREAM_SCHEMA embedding columns; the alignment, language
+    (``allowed_langs``) and safety (``max_banned_frac``) gates are
+    codegen filters, so like the metadata gates they add no state store
+    and no exchange, and a gated-out pair leaves no trace in the dedup
+    state."""
     schema = (
         PAIRS_EMB_STREAM_SCHEMA if min_alignment is not None
         else PAIRS_STREAM_SCHEMA
     )
     src = spark.readStream.schema(schema).parquet(pairs_dir)
-    scored = (
-        src.withColumn("n_pixels", (F.col("w") * F.col("h")).cast("long"))
-        .withColumn(
-            "aspect", F.round(F.greatest("w", "h") / F.least("w", "h"), 6)
-        )
-        .withColumn(
-            "caption_tokens", token_count_expr(F.col("caption")).cast("int")
-        )
-        .filter(
-            (F.col("n_pixels") >= min_pixels)
-            & (F.col("aspect") <= max_aspect)
-            & (F.col("caption_tokens") >= min_caption_tokens)
-        )
-    )
-    if max_banned_frac is not None:
-        from ..functions.curation import blocklist_stats_expr
-
-        scored = scored.filter(
-            blocklist_stats_expr(F.col("caption"))["banned_frac"]
-            <= F.lit(float(max_banned_frac))
-        )
-    if allowed_langs is not None:
-        from ..functions.textanalysis import lang_id_expr
-
-        scored = scored.filter(
-            lang_id_expr(F.col("caption")).isin(
-                *[F.lit(l) for l in allowed_langs]
-            )
-        )
-    if min_alignment is not None:
-        from ..functions.simsearch import cosine_expr
-
-        a = F.round(
-            cosine_expr(F.col("image_emb"), F.col("caption_emb")), 6
-        )
-        scored = (
-            scored.withColumn("alignment", a)
-            .filter(F.col("alignment") >= F.lit(float(min_alignment)))
-            .drop("image_emb", "caption_emb", "alignment")
-        )
-    gated = (
-        scored.withColumn("_q", quality_struct_udf(F.col("bytes"), F.col("fmt")))
-        .filter(
-            F.col("_q.decode_ok")
-            & (F.col("_q.sharp_milli") >= F.lit(int(min_sharp_milli)))
-            & (F.col("_q.ent_milli") >= F.lit(int(min_ent_milli)))
-        )
-        .withColumn("sharp_milli", F.col("_q.sharp_milli"))
-        .withColumn("ent_milli", F.col("_q.ent_milli"))
-        .drop("_q", "bytes")
-        .withColumn("_cap_fp", md5_60_expr(F.col("caption")))
-    )
+    gated = gate_pairs(
+        src,
+        min_pixels=min_pixels,
+        max_aspect=max_aspect,
+        min_caption_tokens=min_caption_tokens,
+        max_banned_frac=max_banned_frac,
+        allowed_langs=allowed_langs,
+        min_alignment=min_alignment,
+        min_sharp_milli=min_sharp_milli,
+        min_ent_milli=min_ent_milli,
+    ).select(*_SINK_COLS, md5_60_expr(F.col("caption")).alias("_cap_fp"))
     if ttl is None:
         kept = gated.dropDuplicates(["phash"]).dropDuplicates(["_cap_fp"])
     else:
@@ -167,11 +124,7 @@ def curate_pairs_stream(
             .drop("event_ts")
         )
     return (
-        kept.select(
-            "image_id", "w", "h", "fmt", "caption", "phash",
-            "n_pixels", "aspect", "caption_tokens",
-            "sharp_milli", "ent_milli", "event_time",
-        )
+        kept.select(*_SINK_COLS)
         .writeStream.format("parquet")
         .option("path", out_dir)
         .option("checkpointLocation", checkpoint_dir)
