@@ -247,7 +247,7 @@ class TestForceRescrape:
         assert dup_urls > 0
         # the SEEN table stays exactly-once per key even though force
         # bypassed the pop gate (re-marking would duplicate bucket-pure
-        # rows forever and double-insert cuckoo fingerprints)
+        # rows forever)
         seen = cat.read("seen")
         assert seen.count() == seen.select("url_sha1").distinct().count()
 

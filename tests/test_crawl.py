@@ -184,6 +184,15 @@ class TestResume:
         rb = sorted(map(tuple, fb.collect())) if fb is not None else []
         assert ra == rb
 
+        # and the seen sketch, byte for byte
+        def sketch_rows(cat):
+            return sorted(
+                (r["shard"], bytes(r["bloom"]), r["n"])
+                for r in cat.read("seen_sketch").select("shard", "bloom", "n").collect()
+            )
+
+        assert sketch_rows(cat_a) == sketch_rows(cat_b)
+
 
 class TestCompaction:
     def test_compacted_crawl_state_identical(self, spark, tmp_path_factory):

@@ -6,14 +6,17 @@ PII boundary behavior, and the SemDeDup pigeonhole invariants on planted
 duplicates.
 """
 
+import os
+
 import duckdb
 import pytest
+from conftest import TESTDATA
 from pyspark.sql import Row, functions as F
 
 from web_scraper_spark.functions import curation as cu, simsearch as ss
 from web_scraper_spark.functions.textanalysis import md5_60_expr
 
-DOCS = "/root/testdata/sf0.001/documents.parquet"
+DOCS = os.path.join(TESTDATA, "sf0.001", "documents.parquet")
 
 
 def _grams(spark, text, n):

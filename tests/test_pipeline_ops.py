@@ -5,16 +5,19 @@ Each Spark operator is cross-checked against DuckDB running the paired
 oracle harness, so the `__spark_entry__` entries can't drift.
 """
 
+import os
+
 import duckdb
 import numpy as np
 import pandas as pd
 import pytest
+from conftest import TESTDATA
 from pyspark.sql import functions as F
 
 from web_scraper_spark.functions import dedupops, simsearch, textanalysis as ta
 
-DOCS = "/root/testdata/sf0.001/documents.parquet"
-EMB = "/root/testdata/sf0.001/embeddings.parquet"
+DOCS = os.path.join(TESTDATA, "sf0.001", "documents.parquet")
+EMB = os.path.join(TESTDATA, "sf0.001", "embeddings.parquet")
 
 
 @pytest.fixture(scope="module")

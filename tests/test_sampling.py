@@ -3,12 +3,17 @@ the naive one-window semantics exactly — including budget boundaries that
 land on bucket edges, inside buckets, and priority/id ties — and the
 repetition signals must match hand-computed values."""
 
+import os
+
 import pytest
+from conftest import TESTDATA
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from web_scraper_spark.functions import textanalysis as ta
 from web_scraper_spark.operators.sampling import token_budget_sample
+
+DOCS = os.path.join(TESTDATA, "sf0.001", "documents.parquet")
 
 
 def naive_keep(rows, budget):
@@ -276,8 +281,6 @@ def test_mixture_budgets_equal_per_stratum_scalar_runs(spark):
 # chunk_documents — context-window chunking
 # ---------------------------------------------------------------------------
 
-import os
-
 import duckdb
 
 from web_scraper_spark.operators.sampling import (
@@ -339,7 +342,7 @@ def test_chunk_reconstruction_and_coverage(spark, C, o):
     """dropping the first `overlap` tokens of chunks 1..k reconstructs
     every document exactly — no token lost, none duplicated beyond the
     declared overlap."""
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    docs = spark.read.parquet(DOCS)
     sample = docs.filter(F.col("doc_id") < 40)
     texts = {r["doc_id"]: r["text"].split() for r in sample.collect()}
     chunks = {}
@@ -361,7 +364,7 @@ def test_chunk_reconstruction_and_coverage(spark, C, o):
 def test_chunk_plan_no_shuffle(spark):
     from web_scraper_spark.plans import audit
 
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    docs = spark.read.parquet(DOCS)
     df = chunk_documents(docs, 64, 16)
     plan = audit.physical_plan(df)
     assert "Exchange" not in plan
@@ -372,10 +375,9 @@ def test_chunk_plan_no_shuffle(spark):
 def test_chunk_duckdb_twin(spark):
     con = duckdb.connect()
     con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        "'/root/testdata/sf0.001/documents.parquet'"
+        f"CREATE VIEW documents AS SELECT * FROM '{DOCS}'"
     )
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    docs = spark.read.parquet(DOCS)
     got = {
         (r["doc_id"], r["chunk_id"]): (r["chunk_text"], r["chunk_n"])
         for r in chunk_documents(docs, 32, 8).collect()

@@ -6,6 +6,9 @@ false positives get verified; bloom misses are proofs). Mirrors
 is_visited/mark_visited_bulk (redis_helper.c:210-262).
 """
 
+import time
+import uuid
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -69,16 +72,23 @@ def test_seen_without_lineage_is_refused(spark, urls):
     assert seen_ops.filter_unseen(urls, None, sk) is urls
 
 
+def _sketch_rows(sk):
+    return {r["shard"]: (bytes(r["bloom"]), int(r["n"])) for r in sk.collect()}
+
+
 def test_incremental_sketch_update_equals_rebuild(spark, urls, tmp_path):
     a = urls.filter("pmod(crc32(url), 3) = 0")
     b = urls.filter("pmod(crc32(url), 3) = 1")
     cat = Catalog(spark, str(tmp_path))
-    seen_a, _ = _append_seen(cat, a)
+    seen_a, bf_a = _append_seen(cat, a)
     sk_a = seen_ops.build_sketches(seen_a, capacity=1024)
-    sk_ab = seen_ops.update_sketches(
-        spark, sk_a, b.select("url_sha1", "shard"), NUM_SHARDS, capacity=1024
+    sk_ab = seen_ops.update_sketches_autoscale(
+        spark, sk_a, b.select("url_sha1", "shard"), bf_a, capacity=1024
     )
     seen_ab, bf_ab = _append_seen(cat, b, generation=1)
+    # below capacity the fold only adds keys, and a bloom's bytes do not
+    # depend on insertion order: incremental == full rebuild, byte for byte
+    assert _sketch_rows(sk_ab) == _sketch_rows(seen_ops.build_sketches(seen_ab, capacity=1024))
     # the incremental sketches must still answer dedup exactly
     got = {r["url"] for r in seen_ops.filter_unseen(urls, seen_ab, sk_ab, bf_ab).collect()}
     assert got == _antijoin(urls, seen_ab)
@@ -88,33 +98,65 @@ def test_delete_supports_force_rescrape(spark, urls, tmp_path):
     sub = urls.limit(50)
     cat = Catalog(spark, str(tmp_path))
     seen, _ = _append_seen(cat, sub)
-    sk = seen_ops.build_sketches(seen, capacity=1024)
-    victim = sub.limit(10)
+    sk = seen_ops.build_sketches(seen, capacity=1024).cache()
+    victim = sub.limit(10).cache()
     # delete the way api.clear_url does: a bucket-pure rewrite of seen
-    # without the keys
+    # without the keys; the sketch is left stale (the bloom keeps them)
     cat.stage_cow("seen", seen.join(victim.select("url_sha1"), "url_sha1", "left_anti"), "shard", None)
     cat.commit(generation=1, t0=0.0)
     seen2, bf2 = cat.read("seen"), cat.bucket_files("seen")
-    sk2 = seen_ops.update_sketches(
-        spark,
-        sk,
-        spark.createDataFrame([], "url_sha1 string, shard int"),
-        NUM_SHARDS,
-        capacity=1024,
-        deletes=victim.select("url_sha1", "shard"),
-    )
-    # deleted urls must come back as unseen (exactness preserved)
-    got = {r["url"] for r in seen_ops.filter_unseen(urls, seen2, sk2, bf2).collect()}
+    # deleted urls must come back as unseen (exactness preserved): their
+    # stale bloom "maybe" is verified against the rewritten files
+    got = {r["url"] for r in seen_ops.filter_unseen(urls, seen2, sk, bf2).collect()}
     assert {r["url"] for r in victim.collect()} <= got
     assert got == _antijoin(urls, seen2)
     assert len(got) == 400 - 40
+    # the rescrape marks them seen again through the one fold
+    sk3 = seen_ops.update_sketches_autoscale(
+        spark, sk, victim.select("url_sha1", "shard"), bf2, capacity=1024
+    )
+    seen3, bf3 = _append_seen(cat, victim, generation=2)
+    got3 = {r["url"] for r in seen_ops.filter_unseen(urls, seen3, sk3, bf3).collect()}
+    assert got3 == _antijoin(urls, seen3)
+    assert len(got3) == 400 - 50
+    sk.unpersist(); victim.unpersist()
+
+
+def test_fold_starts_no_job(spark, urls, tmp_path):
+    """Calling update_sketches_autoscale only plans the fold: overflow is
+    decided inside the shard tasks, so nothing is collected to the driver
+    before the caller's write runs it."""
+    first = urls.limit(40).select("url_sha1", "shard")
+    _, bf = _append_seen(Catalog(spark, str(tmp_path)), first)
+    sk = seen_ops.build_sketches(first, capacity=64)
+    delta = urls.select("url_sha1", "shard").join(first, "url_sha1", "left_anti")
+    sc = spark.sparkContext
+    st = sc.statusTracker()
+    group, marker = f"fold-{uuid.uuid4().hex}", f"marker-{uuid.uuid4().hex}"
+    try:
+        sc.setJobGroup(group, "update_sketches_autoscale")
+        seen_ops.update_sketches_autoscale(spark, sk, delta, bf, capacity=64)
+        # the listener bus delivers job starts in order: once a later
+        # marker job is visible, any job the fold started is visible too
+        sc.setJobGroup(marker, "bracket")
+        spark.range(1).count()
+        deadline = time.time() + 10
+        while not st.getJobIdsForGroup(marker):
+            assert time.time() < deadline, "the marker job never reached the status store"
+            time.sleep(0.1)
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    assert list(st.getJobIdsForGroup(group)) == []
 
 
 def test_autoscale_rebuilds_overflowing_shard(spark, urls, tmp_path):
     """A shard whose key count outgrows its bloom is rebuilt at >=2x size
-    from the authoritative rows; untouched shards carry byte-identically.
-    Without the rescale the bloom saturates silently (fpp -> 1) and the
-    membership accelerator degrades to reading every touched shard."""
+    inside its fold task from that shard's seen files; untouched shards
+    carry byte-identically. Without the rescale the bloom saturates
+    silently (fpp -> 1) and the membership accelerator degrades to
+    reading every touched shard."""
     cap = 64  # Bloom.for_capacity floor — ~200 keys/shard below overflow it
     urls = with_url_identity(
         spark.createDataFrame(
@@ -124,9 +166,9 @@ def test_autoscale_rebuilds_overflowing_shard(spark, urls, tmp_path):
     ).cache()
     first = urls.limit(120).select("url_sha1", "shard")
     cat = Catalog(spark, str(tmp_path))
-    seen0, _ = _append_seen(cat, first)
+    seen0, bf0 = _append_seen(cat, first)
     sk0 = seen_ops.build_sketches(seen0, capacity=cap).cache()
-    bytes0 = {r["shard"]: (bytes(r["bloom"]), int(r["n"])) for r in sk0.collect()}
+    bytes0 = _sketch_rows(sk0)
 
     rest = (
         urls.select("url_sha1", "shard")
@@ -138,13 +180,18 @@ def test_autoscale_rebuilds_overflowing_shard(spark, urls, tmp_path):
     n_delta = delta.count()
     assert n_delta + bytes0.get(target, (b"", 0))[1] > cap  # really overflows
 
-    sk1 = seen_ops.update_sketches_autoscale(
-        spark, sk0, delta, seen0, NUM_SHARDS, capacity=cap
-    ).cache()
-    rows1 = {r["shard"]: (bytes(r["bloom"]), int(r["n"])) for r in sk1.collect()}
-    # overflowing shard: rebuilt bigger, exact n
+    # only the overflowing shard may open its files: every other path is
+    # poisoned, so a read there fails the job
+    files = {b: (ps if int(b) == target else ["/nonexistent/poisoned.parquet"])
+             for b, ps in bf0.items()}
+    sk1 = seen_ops.update_sketches_autoscale(spark, sk0, delta, files, capacity=cap).cache()
+    rows1 = _sketch_rows(sk1)
+    # overflowing shard: rebuilt bigger, exact n, and byte for byte the
+    # full build over that shard's seen keys and the delta
     assert len(rows1[target][0]) > len(bytes0[target][0])
     assert rows1[target][1] == bytes0[target][1] + n_delta
+    full = seen0.filter(F.col("shard") == target).unionByName(delta)
+    assert rows1[target] == _sketch_rows(seen_ops.build_sketches(full, capacity=cap))[target]
     # every other shard: byte-identical carry
     for sh, (b0, n0) in bytes0.items():
         if sh != target:

@@ -9,6 +9,7 @@ import os
 import time
 
 import pytest
+from conftest import TESTDATA
 from pyspark.sql import functions as F
 
 from web_scraper_spark.streaming.politeness import (
@@ -666,7 +667,7 @@ class TestStreamingCuration:
         os.makedirs(docs, exist_ok=True)
 
         d = (
-            spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+            spark.read.parquet(os.path.join(TESTDATA, "sf0.001", "documents.parquet"))
             .select("doc_id", "text")
         )
         train = d.filter(F.col("doc_id") % 5 != 0)

@@ -5,8 +5,8 @@ A from-scratch, Spark-first re-expression of the semantics of the C crawler
 per-URL fetch/extract/cache pipeline becomes distributed set operators over
 snapshot-committed tables:
 
-- partition-sharded bloom+cuckoo URL-seen set over canonicalized+SHA1 URLs
-  (operators/seen.py),
+- partition-sharded URL-seen set over canonicalized+SHA1 URLs with one
+  bloom per shard (operators/seen.py),
 - host-bucketed politeness priority queue with robots.txt caching and
   per-host crawl-delay budgets (operators/scheduler.py, operators/robots.py),
 - link / image / caption extraction as vectorized pandas/Arrow UDFs

@@ -9,10 +9,10 @@
   returns a placeholder {"AI", 42, 15.5}, content_analyzer.c:495-535).
 - ``clear_url``       — S11 cache invalidation (cache_clear_url,
   cache.c:300-320): removes a URL from seen + pages so the next crawl
-  re-fetches it. It rewrites seen only: the sketches keep the key (no
-  caller passes ``update_sketches(deletes=)``), so the bloom stays
-  stale-conservative — the key costs one "maybe" that filter_unseen
-  verifies against the rewritten seen files, never a wrong answer.
+  re-fetches it. It rewrites seen only: a bloom cannot delete, so the
+  shard's sketch keeps the key and stays stale-conservative — the key
+  costs one "maybe" that filter_unseen verifies against the rewritten
+  seen files, never a wrong answer.
 """
 
 from __future__ import annotations

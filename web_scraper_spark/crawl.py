@@ -635,7 +635,7 @@ def _generation(
         # force bypasses the pop-gate, so the batch can contain urls that
         # are ALREADY seen — appending them again would duplicate keys in
         # the bucket-pure seen table forever (compaction unions without a
-        # key dedup) and double-insert cuckoo fingerprints. Keep the seen
+        # key dedup) and count them twice in the sketch's n. Keep the seen
         # table exactly-once per key. Materialized: the seen and sketch
         # writes both read the delta, and each would rerun the probe.
         seen_next_delta = materialized(seen_ops.filter_unseen(
@@ -643,13 +643,13 @@ def _generation(
         ))
 
     def stage_sketch() -> None:
-        # autoscale: a shard whose key count outgrows its bloom is rebuilt
-        # at >=2x from the authoritative seen rows (bucket-pure files =>
-        # the rebuild reads only that shard); without this the bloom
+        # one shard-local fold: a shard whose key count would outgrow its
+        # bloom is rebuilt at >=2x inside its task from its own seen files
+        # (bucket-pure => only that shard); without this the bloom
         # saturates silently at ~capacity keys/shard and the membership
         # accelerator degrades to reading every touched shard's files
         cat.stage("seen_sketch", seen_ops.update_sketches_autoscale(
-            spark, sketch_df, seen_next_delta, seen, cfg.num_shards,
+            spark, sketch_df, seen_next_delta, seen_files,
             capacity=seen_ops.DEFAULT_SHARD_CAPACITY, fpp=cfg.bloom_fpp,
         ))
 

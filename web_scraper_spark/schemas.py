@@ -34,12 +34,11 @@ SEEN = T.StructType(
     ]
 )
 
-# Per-shard sketch rows (bloom OR-mergeable bitset + cuckoo filter).
+# Per-shard sketch rows: the shard's bloom and the key count it holds.
 SEEN_SKETCH = T.StructType(
     [
         T.StructField("shard", T.IntegerType(), False),
         T.StructField("bloom", T.BinaryType(), True),
-        T.StructField("cuckoo", T.BinaryType(), True),
         T.StructField("n", T.LongType(), False),
     ]
 )
