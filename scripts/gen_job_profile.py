@@ -7,7 +7,13 @@ use) with ``spark.eventLog.enabled`` set into a temp dir, then prints:
 
 - each job of the generation: PySpark call site, wall time, tasks run;
 - the ten call sites with the most summed job wall;
-- jobs per generation;
+- jobs per generation and the tasks they ran;
+- the generation's stages that run an RDD of Python workers
+  (``python_rdd_stages``/``python_rdd_tasks``): stages whose completed
+  "RDD Info" names a ``PythonRDD``, as PySpark builds from a
+  ``createDataFrame`` on a Python list or from RDD ``map`` functions
+  (Arrow UDFs and ``applyInPandas`` run inside SQL stages and do not
+  count);
 - the overlap factor, the jobs' summed wall over the generation's span
   (below 1: the driver works between jobs; above 1: jobs run concurrently);
 - the plan-description bytes the run posted: Spark renders a physical
@@ -128,11 +134,13 @@ def crawl_one_generation(spark, work: str) -> tuple[float, float]:
 
 def read_jobs(event_dir: str, group: str) -> list[dict]:
     """Jobs of `group` from the event log: id, call site, start/end (epoch
-    ms) and tasks run. A stage shared by several jobs runs once, in the
+    ms), tasks run, and the stages and tasks of those that ran a
+    PythonRDD. A stage shared by several jobs runs once, in the
     lowest-numbered of them; its tasks count there."""
     jobs: dict[int, dict] = {}
     stage_jobs: dict[int, list[int]] = defaultdict(list)
     stage_tasks: dict[int, int] = defaultdict(int)
+    python_stages: set[int] = set()
     for name in sorted(os.listdir(event_dir)):
         with open(os.path.join(event_dir, name)) as f:
             for line in f:
@@ -152,12 +160,19 @@ def read_jobs(event_dir: str, group: str) -> list[dict]:
                     jobs[ev["Job ID"]]["end"] = ev["Completion Time"]
                 elif kind == "SparkListenerTaskEnd":
                     stage_tasks[ev["Stage ID"]] += 1
+                elif kind == "SparkListenerStageCompleted":
+                    info = ev["Stage Info"]
+                    if any(r.get("Name") == "PythonRDD" for r in info.get("RDD Info", [])):
+                        python_stages.add(info["Stage ID"])
     for j in jobs.values():
-        j["tasks"] = 0
+        j["tasks"] = j["python_rdd_stages"] = j["python_rdd_tasks"] = 0
     for sid, n in stage_tasks.items():
         owner = min(stage_jobs.get(sid, [-1]))
         if owner in jobs:
             jobs[owner]["tasks"] += n
+            if sid in python_stages:
+                jobs[owner]["python_rdd_stages"] += 1
+                jobs[owner]["python_rdd_tasks"] += n
     return [jobs[k] for k in sorted(jobs)]
 
 
@@ -214,6 +229,8 @@ def report(jobs: list[dict], t0: float, t1: float, plans: dict) -> None:
     summary = {
         "jobs_per_generation": len(jobs),
         "tasks": sum(j["tasks"] for j in jobs),
+        "python_rdd_stages": sum(j["python_rdd_stages"] for j in jobs),
+        "python_rdd_tasks": sum(j["python_rdd_tasks"] for j in jobs),
         "generation_s": round(span, 3),
         "job_wall_s": round(job_wall, 3),
         "overlap_factor": round(job_wall / span, 3) if span > 0 else None,

@@ -4,6 +4,8 @@ from __future__ import annotations
 
 import os
 import sys
+import time
+import uuid
 
 import pytest
 
@@ -35,3 +37,26 @@ def sf001_dir():
 @pytest.fixture(scope="session")
 def sf01_dir():
     return os.path.join(TESTDATA, "sf0.01")
+
+
+def jobs_started(spark, fn) -> list[int]:
+    """Ids of the Spark jobs that calling `fn()` starts, run in a job
+    group of its own. The listener bus delivers job starts in order: once
+    a later marker job is visible, any job `fn` started is visible too."""
+    sc = spark.sparkContext
+    st = sc.statusTracker()
+    group, marker = f"call-{uuid.uuid4().hex}", f"marker-{uuid.uuid4().hex}"
+    try:
+        sc.setJobGroup(group, "call")
+        fn()
+        sc.setJobGroup(marker, "bracket")
+        spark.range(1).count()
+        deadline = time.time() + 10
+        while not st.getJobIdsForGroup(marker):
+            assert time.time() < deadline, "the marker job never reached the status store"
+            time.sleep(0.1)
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    return list(st.getJobIdsForGroup(group))

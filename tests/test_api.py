@@ -2,6 +2,7 @@
 fetch-failure / force_rescrape crawl semantics."""
 
 import pytest
+from conftest import jobs_started
 from pyspark.sql import functions as F
 
 from oracle_sim import sha1_hex, simulate
@@ -118,6 +119,18 @@ class TestTrendPayload:
             )
             expect = [h for h, _ in sorted(c.items(), key=lambda kv: (-kv[1], kv[0]))[:2]]
             assert r["sources"] == expect, r["topic"]
+
+
+class TestCanon:
+    def test_canon_starts_no_job(self, spark):
+        """_canon's one-row frame is a LocalRelation: the canonicalize
+        projection folds into it on the driver and head(1) reads it there,
+        so canonicalizing a user URL starts no Spark job."""
+        out = []
+        assert jobs_started(
+            spark, lambda: out.append(api._canon(spark, "/a/./b/../c#frag"))
+        ) == []
+        assert out == ["http://seed.invalid/a/c"]
 
 
 class TestClearUrl:

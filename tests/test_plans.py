@@ -72,6 +72,20 @@ def test_robots_decision_is_broadcast(spark):
     assert audit.single_partition_exchanges(out) == 0
 
 
+def test_driver_frames_are_local_relations(spark):
+    """Frames built from driver-side rows are LocalRelations, not the
+    LogicalRDD of a Python-list createDataFrame: no Python-worker stage
+    scans them, and the optimizer folds the projections over them."""
+    from web_scraper_spark.operators import scheduler, seen
+
+    for df in (
+        scheduler.default_host_state(spark),
+        seen._shard_side(spark, None, {"0": ["/no/such/part-0.parquet"]}),
+    ):
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        assert "LogicalRDD" not in plan and "LocalRelation" in plan, plan
+
+
 def test_no_cartesian_in_any_query(spark):
     """Every driver query must be cartesian-free: the near-dup joins go
     through band/bucket equi-joins, top-k through windows. (cosine has an

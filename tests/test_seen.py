@@ -6,10 +6,8 @@ false positives get verified; bloom misses are proofs). Mirrors
 is_visited/mark_visited_bulk (redis_helper.c:210-262).
 """
 
-import time
-import uuid
-
 import pytest
+from conftest import jobs_started
 from pyspark.sql import functions as F
 
 from web_scraper_spark.catalog import Catalog
@@ -130,25 +128,9 @@ def test_fold_starts_no_job(spark, urls, tmp_path):
     _, bf = _append_seen(Catalog(spark, str(tmp_path)), first)
     sk = seen_ops.build_sketches(first, capacity=64)
     delta = urls.select("url_sha1", "shard").join(first, "url_sha1", "left_anti")
-    sc = spark.sparkContext
-    st = sc.statusTracker()
-    group, marker = f"fold-{uuid.uuid4().hex}", f"marker-{uuid.uuid4().hex}"
-    try:
-        sc.setJobGroup(group, "update_sketches_autoscale")
-        seen_ops.update_sketches_autoscale(spark, sk, delta, bf, capacity=64)
-        # the listener bus delivers job starts in order: once a later
-        # marker job is visible, any job the fold started is visible too
-        sc.setJobGroup(marker, "bracket")
-        spark.range(1).count()
-        deadline = time.time() + 10
-        while not st.getJobIdsForGroup(marker):
-            assert time.time() < deadline, "the marker job never reached the status store"
-            time.sleep(0.1)
-    finally:
-        for key in ("spark.jobGroup.id", "spark.job.description",
-                    "spark.job.interruptOnCancel"):
-            sc.setLocalProperty(key, None)
-    assert list(st.getJobIdsForGroup(group)) == []
+    assert jobs_started(
+        spark, lambda: seen_ops.update_sketches_autoscale(spark, sk, delta, bf, capacity=64)
+    ) == []
 
 
 def test_autoscale_rebuilds_overflowing_shard(spark, urls, tmp_path):

@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from . import schemas
 from .catalog import Catalog
 from .functions import textops
 from .functions.dedupops import register_op_cache
@@ -34,7 +35,7 @@ def _canon(spark: SparkSession, url: str) -> str:
     on the canonical form or a fragment/case/default-port variant misses
     the cache (and clear_url's sha1 would never match seen.url_sha1)."""
     row = (
-        spark.createDataFrame([(url,)], ["url"])
+        schemas.local_frame(spark, [(url,)], "url string")
         .select(canonicalize(F.lit("http://seed.invalid/"), F.col("url")).alias("c"))
         .head(1)
     )
@@ -68,7 +69,7 @@ def analyze_url(
             hit = pages.filter(F.col("url") == url).select(*cols)
             if hit.head(1):
                 return hit.withColumn("cached", F.lit(True))
-    one = spark.createDataFrame([(url,)], ["url_canon"])
+    one = schemas.local_frame(spark, [(url,)], "url_canon string")
     if cfg is not None and getattr(cfg, "transport", "synth") == "http":
         fetched = fetch_src.fetch_pages_http(
             one,
@@ -223,7 +224,7 @@ def clear_url(cat: Catalog, url: str, num_shards: int) -> dict:
     Returns the staged manifest entries."""
     spark = cat.spark
     url = _canon(spark, url)
-    key = spark.createDataFrame([(url,)], ["url_canon"]).select(
+    key = schemas.local_frame(spark, [(url,)], "url_canon string").select(
         sha1_expr(F.col("url_canon")).alias("url_sha1")
     )
     out = {}

@@ -271,9 +271,13 @@ def _generation(
     if cfg.max_pages and total_processed >= cfg.max_pages:
         return GenerationResult(g, 0, 0, 0, 0, True)
 
-    frontier = cat.read("frontier")
-    if frontier is None or not frontier.head(1):
+    # the frontier's exact size comes from the manifest (parquet footer
+    # row counts taken at write time, as at the end of the generation),
+    # not from a scan of the frontier
+    n_frontier = int(snap.tables.get("frontier", {}).get("rows", 0))
+    if n_frontier == 0:
         return GenerationResult(g, 0, 0, 0, 0, True)
+    frontier = cat.read("frontier")
     seen = cat.read("seen")
     # bucket-pure lineage of the seen table (stage_append_cow): both seen
     # gates below verify membership shard-aligned against exactly the
@@ -296,14 +300,16 @@ def _generation(
     frontier = materialized(frontier)
 
     # -------- 1. pop-gate: drop frontier rows already seen (urls_skipped).
-    # force_rescrape bypasses the visited check (url_processor.c:47-53)
+    # force_rescrape bypasses the visited check (url_processor.c:47-53).
+    # With n_frontier from the manifest the gate's one job is the
+    # candidates count; the probe's shard side (sketch rows + seen-file
+    # paths) is a LocalRelation, so none of its stages runs Python workers.
     if cfg.force_rescrape:
         candidates = frontier
     else:
         candidates = seen_ops.filter_unseen(
             frontier, seen, sketch_df, bucket_files=seen_files
         )
-    n_frontier = frontier.count()
     if candidates is frontier:  # forced, or nothing seen yet
         n_candidates = n_frontier
     else:
@@ -448,7 +454,7 @@ def _generation(
     prev_attempts = (
         failures.select("url_sha1", "attempts")
         if failures is not None
-        else spark.createDataFrame([], "url_sha1 string, attempts int")
+        else schemas.local_frame(spark, [], "url_sha1 string, attempts int")
     )
     backoff = max(1, int(cfg.retry_delay))
     fail_rows = materialized(
@@ -591,7 +597,7 @@ def _generation(
     # shards with seen-skip drops: cheap per-shard count diff (both sides
     # materialized; the joined result is ≤ num_shards rows)
     if cfg.force_rescrape:
-        skip_shards = spark.createDataFrame([], "shard int")
+        skip_shards = schemas.local_frame(spark, [], "shard int")
     else:
         fcnt = frontier.groupBy("shard").agg(F.count(F.lit(1)).alias("fn"))
         ccnt = candidates.groupBy("shard").agg(F.count(F.lit(1)).alias("cn"))
@@ -794,7 +800,7 @@ def _generation(
         carried = (
             failures.join(resolved_keys, "url_sha1", "left_anti")
             if failures is not None
-            else spark.createDataFrame([], schemas.FETCH_FAILURES)
+            else schemas.local_frame(spark, [], schemas.FETCH_FAILURES)
         )
         fail_cols = [f.name for f in schemas.FETCH_FAILURES.fields]
         cat.stage("fetch_failures", carried.select(*fail_cols).unionByName(

@@ -32,6 +32,8 @@ import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .. import schemas
+
 # --------------------------------------------------------------------------
 # native cosine
 # --------------------------------------------------------------------------
@@ -807,7 +809,8 @@ def ivf_topk(
     from pyspark.sql import types as T
 
     spark = corpus.sparkSession
-    probes = spark.createDataFrame(
+    probes = schemas.local_frame(
+        spark,
         probe_rows,
         T.StructType(
             [

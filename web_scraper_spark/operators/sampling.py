@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .. import schemas
+
 
 def token_budget_sample(
     docs: DataFrame,
@@ -79,7 +81,8 @@ def token_budget_sample(
             stratum_col,
         )
     elif isinstance(budget_tokens, dict):
-        budgets = docs.sparkSession.createDataFrame(
+        budgets = schemas.local_frame(
+            docs.sparkSession,
             [(str(k), int(v)) for k, v in sorted(budget_tokens.items())],
             f"{stratum_col} string, _budget long",
         )

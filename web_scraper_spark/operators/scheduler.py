@@ -63,7 +63,7 @@ from ..config import (
 
 
 def default_host_state(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame([], schemas.HOST_STATE)
+    return schemas.local_frame(spark, [], schemas.HOST_STATE)
 
 
 def ensure_hosts(host_state: DataFrame, hosts: DataFrame) -> DataFrame:

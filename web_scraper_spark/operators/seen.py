@@ -66,13 +66,17 @@ def _shard_side(
     task deserializes only ITS shard's path list — nothing shard-global
     ships in the task closure (at 4096 shards x many files the full dict
     was real per-task serialization weight, r3 verdict "what's wrong" #5).
-    Sketch columns are selected by name, so a sketch table carrying extra
-    columns reads the same.
+    The paths side (and the empty sketch when there is no sketch table) is
+    a LocalRelation built through schemas.local_frame: the optimizer folds
+    the null-padding projection into it, no Python worker reads it, and
+    its scan still hands each task only its own slice of the rows. Sketch
+    columns are selected by name, so a sketch table carrying extra columns
+    reads the same.
     """
     if sketch_df is None:
-        sketch_df = spark.createDataFrame([], schemas.SEEN_SKETCH)
+        sketch_df = schemas.local_frame(spark, [], schemas.SEEN_SKETCH)
     paths_rows = [(int(k), list(map(str, v))) for k, v in (bucket_files or {}).items()]
-    paths_df = spark.createDataFrame(paths_rows, "shard int, _paths array<string>")
+    paths_df = schemas.local_frame(spark, paths_rows, "shard int, _paths array<string>")
     return sketch_df.select(
         "shard", "bloom", "n", F.lit(None).cast("array<string>").alias("_paths")
     ).unionByName(

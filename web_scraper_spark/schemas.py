@@ -3,11 +3,44 @@
 The reference fixes all schemas at compile time in C headers
 (types.h:5-56, cache.h:13-28, data_store.c:10-35); we do the same in one
 module. FIXTURES.md §5 documents the checkpoint schemas.
+
+`local_frame` is the one way the engine turns driver-side Python rows
+into a DataFrame.
 """
 
 from __future__ import annotations
 
+from collections.abc import Iterable, Sequence
+
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+
+
+def local_frame(
+    spark: SparkSession, rows: Iterable[Sequence], schema: T.StructType | str
+) -> DataFrame:
+    """A DataFrame of driver-side `rows` (tuples in `schema` field order)
+    built as an Arrow table, so Spark holds it as a JVM LocalRelation.
+
+    createDataFrame on a Python list plans parallelize → Python map →
+    LogicalRDD: every scan of it is a stage of Python-worker tasks, and
+    the optimizer cannot see through it (an empty one is not pruned, a
+    projection over it is not folded). An Arrow table crosses the
+    Python boundary once, on the driver, and no Python worker ever
+    reads it. `schema` is a StructType or a DDL string."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    rows = list(rows)
+    table = pa.table(
+        [pa.array([r[i] for r in rows], type=f.type) for i, f in enumerate(arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)
+
 
 # ---------------------------------------------------------------- frontier
 # One row per pending crawl task (reference url_task_t, types.h:5-10).

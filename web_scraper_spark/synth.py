@@ -500,7 +500,7 @@ def video_clips_df(spark, n: int, seed: int = 42, partitions: int | None = None)
 def web_graph_df(spark, cfg: SynthWebConfig):
     """Materialized synthetic web (for tests/queries; the fetcher itself
     evaluates page_for_url lazily and never needs this table)."""
-    from .schemas import WEB_GRAPH
+    from .schemas import WEB_GRAPH, local_frame
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -518,5 +518,5 @@ def web_graph_df(spark, cfg: SynthWebConfig):
                 )
             yield pd.DataFrame(rows)
 
-    urls = spark.createDataFrame([(u,) for u in all_urls(cfg)], ["url"])
+    urls = local_frame(spark, [(u,) for u in all_urls(cfg)], "url string")
     return urls.repartition(8).mapInPandas(gen, schema=WEB_GRAPH)
